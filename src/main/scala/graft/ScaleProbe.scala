@@ -178,7 +178,7 @@ object ScaleProbe {
         try {
           df.write.format("noop").mode("overwrite").save()
         } catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             println(s"[scale] $label@${reps}x SKIPPED (${e.getClass.getSimpleName}: " +
               s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)})")
             spark.catalog.clearCache(); System.gc()

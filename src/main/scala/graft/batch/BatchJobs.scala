@@ -66,10 +66,12 @@ object BatchJobs {
     * WarehouseLoader.writeSnapshot) so concurrent readers see either
     * the old or the new layout. Run it on a cadence; the streaming
     * writer keeps appending to the swapped-in store because the path
-    * is unchanged. Returns (filesBefore, filesAfter). */
+    * is unchanged. A torn earlier swap is healed before the store is
+    * read (StoreCommit rule 1). Returns (filesBefore, filesAfter). */
   def compactBuckets(spark: SparkSession, bucketPath: String,
                      targetFileRows: Long = 4000000L): (Long, Long) = {
     import org.apache.hadoop.fs.Path
+    StoreCommit.heal(spark, bucketPath)
     def countFiles(p: String): Long = {
       val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(new Path(p), true)

@@ -329,9 +329,9 @@ object NearDup {
     * edges. `sets` columns: set_id, ids, toks; `pairs` columns:
     * set_a, set_b, jaccard (distinct sets only).
     *
-    * Both returned frames are persisted (MEMORY_AND_DISK) and `pairs`
-    * is already materialized; callers own unpersisting them when done.
-    * Internal working tables are unpersisted before returning. */
+    * Both returned frames are persisted lazily (MEMORY_AND_DISK): the
+    * caller's first action materializes them. Nothing is unpersisted
+    * internally; callers own unpersisting both when done. */
   def minHashSetPairs(df: DataFrame, idCol: String, tokensCol: Column,
                       numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.8,
                       maxBucketSize: Int = 4096): (DataFrame, DataFrame) = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.batch.StoreCommit
+
 /** The streaming windowed-metrics pipeline — the *legal* form of the
   * reference's core query.
   *
@@ -161,20 +163,34 @@ object StreamPipeline {
     * append-only parquet bucket store (partitioned by symbol, S8),
     * batch id stamped for replay dedup. Ingest metrics travel via
     * `observe` (replacing the reference's per-batch collect()+count()
-    * debug sink, spark_stream_processor.py:75-90 — zero extra jobs). */
+    * debug sink, spark_stream_processor.py:75-90 — zero extra jobs).
+    * The append heals first: BatchJobs.compactBuckets swaps this store. */
   def run(cleaned: DataFrame, bucketPath: String, checkpoint: String,
           trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    bucketPartials(
+    foreachBatchQuery(bucketPartials(
       cleaned.observe("graft_ingest", count(lit(1)).as("rows"), sum(col("volume")).as("volume"))
-    ).writeStream
+    ), checkpoint, trigger) { (batch, batchId) =>
+      StoreCommit.heal(batch.sparkSession, bucketPath)
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("append").partitionBy("symbol").parquet(bucketPath)
+    }
+
+  /** Start `stream` as the append-mode foreachBatch query every
+    * streaming leg here runs. */
+  private def foreachBatchQuery(stream: DataFrame, checkpoint: String, trigger: Trigger)
+                               (body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").partitionBy("symbol").parquet(bucketPath)
-      }
+      .foreachBatch(body)
       .start()
+
+  /** Additive store merge: the live store (if any) ∪ the batch delta,
+    * regrouped by `keys` under `agg`. */
+  private def mergeBy(store: Option[DataFrame], delta: DataFrame,
+                      keys: Seq[String], agg: Column): DataFrame =
+    store.fold(delta)(_.unionByName(delta).groupBy(keys.map(col): _*).agg(agg))
 
   /** Stream into a VERSIONED warehouse table: every micro-batch
     * keep-last-dedups on `keys` and MERGE-commits as a new table
@@ -190,28 +206,22 @@ object StreamPipeline {
                    trigger: Trigger = Trigger.ProcessingTime("1 minute"),
                    loadTsOf: Long => java.sql.Timestamp = b => new java.sql.Timestamp(b),
                    evolve: Boolean = false): StreamingQuery =
-    cleaned.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val deduped = graft.operators.Dedup.keepLast(batch, keys, Seq(col(orderCol)))
-        // evolve=true: a restarted producer with an ADDED column keeps
-        // merging (warehouse ADD COLUMN semantics) instead of failing
-        // the exact-schema require — upstream drift is an operating
-        // condition on a long-lived stream
-        if (evolve)
-          graft.batch.VersionedTable.mergeCommitEvolve(
-            batch.sparkSession, tableRoot, deduped, keys,
-            loadTsOf(batchId), batchId = Some(batchId))
-        else
-          graft.batch.VersionedTable.mergeCommit(
-            batch.sparkSession, tableRoot, deduped, keys,
-            loadTsOf(batchId), // default: batch-derived, so replays stamp identically
-            batchId = Some(batchId))
-        ()
-      }
-      .start()
+    foreachBatchQuery(cleaned, checkpoint, trigger) { (batch, batchId) =>
+      val deduped = graft.operators.Dedup.keepLast(batch, keys, Seq(col(orderCol)))
+      // evolve=true: a restarted producer with an ADDED column keeps
+      // merging (warehouse ADD COLUMN semantics) instead of failing
+      // the exact-schema require — upstream drift is an operating
+      // condition on a long-lived stream
+      if (evolve)
+        graft.batch.VersionedTable.mergeCommitEvolve(
+          batch.sparkSession, tableRoot, deduped, keys,
+          loadTsOf(batchId), batchId = Some(batchId))
+      else
+        graft.batch.VersionedTable.mergeCommit(
+          batch.sparkSession, tableRoot, deduped, keys,
+          loadTsOf(batchId), // default: batch-derived, so replays stamp identically
+          batchId = Some(batchId))
+    }
 
   /** STREAMING ANOMALY ALERTS: flag ticks whose price sits more than
     * `kSigma` sample-stddevs from the symbol's HISTORY — the
@@ -226,35 +236,30 @@ object StreamPipeline {
   def anomalyAlerts(cleaned: DataFrame, bucketPath: String, checkpoint: String,
                     outPath: String, kSigma: Double = 2.0,
                     trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    cleaned.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hasStore = {
-          val p = new org.apache.hadoop.fs.Path(bucketPath)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-        }
-        if (hasStore) {
-          val stats = readBuckets(spark, bucketPath)
-            .groupBy(col("symbol"))
-            .agg(sum(col("n")).as("hn"),
-              sum(col("price_sum")).as("s1"), sum(col("price_sum2")).as("s2"))
-            .filter(col("hn") > 1)
-            .select(col("symbol"),
-              (col("s1").cast("double") / col("hn")).as("mu"),
-              sqrt(greatest(
-                (col("s2").cast("double") - col("s1").cast("double") * col("s1").cast("double") / col("hn"))
-                  / (col("hn") - lit(1d)), lit(0d))).as("sd"))
-          batch.join(broadcast(stats), Seq("symbol"))
-            .filter(col("sd") > 0 && abs(col("price") - col("mu")) > lit(kSigma) * col("sd"))
-            .select(col("symbol"), col("timestamp"), col("price"), col("mu"), col("sd"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
+    foreachBatchQuery(cleaned, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val hasStore = {
+        val p = new org.apache.hadoop.fs.Path(bucketPath)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
       }
-      .start()
+      if (hasStore) {
+        val stats = readBuckets(spark, bucketPath)
+          .groupBy(col("symbol"))
+          .agg(sum(col("n")).as("hn"),
+            sum(col("price_sum")).as("s1"), sum(col("price_sum2")).as("s2"))
+          .filter(col("hn") > 1)
+          .select(col("symbol"),
+            (col("s1").cast("double") / col("hn")).as("mu"),
+            sqrt(greatest(
+              (col("s2").cast("double") - col("s1").cast("double") * col("s1").cast("double") / col("hn"))
+                / (col("hn") - lit(1d)), lit(0d))).as("sd"))
+        batch.join(broadcast(stats), Seq("symbol"))
+          .filter(col("sd") > 0 && abs(col("price") - col("mu")) > lit(kSigma) * col("sd"))
+          .select(col("symbol"), col("timestamp"), col("price"), col("mu"), col("sd"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outPath)
+      }
+    }
 
   /** Read the bucket store exactly-once: replayed micro-batches are
     * dropped by keeping the min batch_id per (symbol, bucket_start). */
@@ -305,151 +310,145 @@ object StreamPipeline {
                     trigger: Trigger = Trigger.ProcessingTime("1 minute"),
                     indexPath: Option[String] = None,
                     microGate: Int = 100000): StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val toks = graft.functions.TextAnalysis.wordTokens(org.apache.spark.sql.functions.col("text"))
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val corpusExists = {
-          val p = new org.apache.hadoop.fs.Path(corpusPath)
-          p.getFileSystem(hconf).exists(p)
-        }
-        // A PRE-EXISTING corpus must be in the index before the first
-        // probe: building the index from this batch's novel docs alone
-        // would leave every standing-corpus doc invisible to later
-        // batches' probes (they probe the index only), silently
-        // re-admitting their near-dups. One-time cost, then O(batch).
-        indexPath.foreach { ix =>
-          if (corpusExists && !graft.functions.BandIndex.exists(spark, ix))
-            graft.functions.BandIndex.build(spark.read.parquet(corpusPath), "doc_id", toks, ix)
-        }
-        val indexed = indexPath.filter(ix => graft.functions.BandIndex.exists(spark, ix))
-
-        // ---- regime gate (the BpeTrain/CC pattern): ONE distributed
-        // prep pass hashes every doc's tokens; a micro-batch under the
-        // gate continues on the driver (MicroDedup — identical
-        // arithmetic, none of the ~6 fixed-latency jobs the
-        // distributed batch-internal stage pays), and the collect is
-        // bounded BY the gate, never by the stream. A trigger bounds
-        // batches by construction, so streaming ingest lives in this
-        // regime; the distributed body below is the over-gate
-        // fallback and the correctness reference (StreamingSpec runs
-        // both and pins identical corpus contents).
-        // the prep projection also computes the 128-hash signature and
-        // its 32 band keys IN the distributed pass — the one
-        // compute-heavy term (38M hash ops at 10k docs), which would
-        // otherwise run single-threaded on the driver
-        val f = org.apache.spark.sql.functions
-        // a MemoryStream/file micro-batch often arrives as ONE
-        // partition — without the repartition the 128-hash signature
-        // pass runs on a single core
-        val prepped = batch.repartition(spark.sparkContext.defaultParallelism)
-          .select(col("doc_id"),
-          f.array_sort(f.transform(f.array_distinct(toks), tk => f.xxhash64(tk))).as("toks"))
-          .withColumn("__sig", graft.functions.MinHashSig.column(col("toks"), 128))
-          .select(col("doc_id"), col("toks"),
-            f.array((0 until 32).map(b =>
-              f.xxhash64(f.slice(col("__sig"), b * 4 + 1, 4))): _*).as("bands"))
-        def dbg[A](label: String)(x: => A): A =
-          if (sys.env.contains("SPARK_GRAFT_DEDUP_DEBUG")) {
-            val t0 = System.nanoTime()
-            val r = x
-            println(f"[dedup-dbg] $label%-22s ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
-            r
-          } else x
-        val collected = dbg("prep+collect")(prepped.limit(microGate + 1).collect())
-        if (collected.length <= microGate) {
-          import spark.implicits._
-          val docs = collected.map(r =>
-            (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray))
-          val micro = dbg("MicroDedup.run")(graft.functions.MicroDedup.run(
-            docs, threshold = threshold, maxBucketSize = 4096))
-          val dupIds: Set[Long] = indexed match {
-            case Some(ix) =>
-              dbg("probeDupIds")(graft.functions.BandIndex.probeDupIdsPrepped(
-                spark, ix, micro.survivors, threshold = threshold).toSet)
-            case None if corpusExists =>
-              val survivorIds = micro.survivors.map(_.id).toSeq.toDF("doc_id")
-              val dups = graft.functions.NearDup.minHashProbePairs(
-                spark.read.parquet(corpusPath),
-                batch.join(broadcast(survivorIds), Seq("doc_id"), "left_semi"),
-                "doc_id", toks, threshold = threshold)
-              val ids = dups.select(col("probe_id")).distinct()
-                .collect().map(_.getLong(0)).toSet
-              dups.unpersist(blocking = false)
-              ids
-            case None => Set.empty
-          }
-          val novelSurvivors = micro.survivors.filterNot(s => dupIds(s.id))
-          val novelIds = novelSurvivors.map(_.id).toSeq.toDF("doc_id")
-          // corpus append and index append write to independent paths
-          // — run the actions concurrently (both must COMPLETE before
-          // the batch commits, so the at-least-once story is unchanged)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val wCorpus = Future {
-            batch.join(broadcast(novelIds), Seq("doc_id"), "left_semi")
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(corpusPath)
-          }
-          val wIndex = Future {
-            indexPath.foreach { ix =>
-              val mode = if (graft.functions.BandIndex.exists(spark, ix)) "append" else "overwrite"
-              graft.functions.BandIndex.writePrepped(spark, novelSurvivors, ix, mode)
-            }
-          }
-          dbg("writes (corpus||index)") {
-            Await.result(wCorpus, scala.concurrent.duration.Duration.Inf)
-            Await.result(wIndex, scala.concurrent.duration.Duration.Inf)
-          }
-        } else {
-        // ---- distributed fallback: batch-internal collapse via LSH
-        // set pairs + connected components, min doc_id per group
-        val (sets, setPairs) = graft.functions.NearDup.minHashSetPairs(
-          batch, "doc_id", toks, numHashes = 128, bands = 32, threshold = threshold)
-        val assigned = graft.operators.ConnectedComponents.dedupAssignmentBySets(sets, setPairs)
-        val batchSurvivors = batch.join(
-          assigned.filter(col("is_canonical")).select(col("doc_id")), Seq("doc_id"), "left_semi")
-        val dupsOpt = indexed match {
-          case Some(ix) =>
-            Some(graft.functions.BandIndex.probePairs(
-              spark, ix, batchSurvivors, "doc_id", toks, threshold = threshold))
-          case None if corpusExists =>
-            Some(graft.functions.NearDup.minHashProbePairs(
-              spark.read.parquet(corpusPath), batchSurvivors, "doc_id", toks,
-              threshold = threshold))
-          case None => None
-        }
-        val novel = dupsOpt match {
-          case Some(dups) => batchSurvivors.join(
-            dups.select(col("probe_id").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-          case None => batchSurvivors
-        }
-        // materialize novel ONCE (it is consumed by the corpus append
-        // and, when indexed, the index append — recomputing it would
-        // re-run the whole probe)
-        val novelOut = novel.withColumn("batch_id", lit(batchId))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        novelOut.write.mode("append").parquet(corpusPath)
-        indexPath.foreach { ix =>
-          if (graft.functions.BandIndex.exists(spark, ix))
-            graft.functions.BandIndex.append(novelOut, "doc_id", toks, ix)
-          else graft.functions.BandIndex.build(novelOut, "doc_id", toks, ix)
-        }
-        // release ONLY the frames this batch persisted — a session-wide
-        // clearCache would also drop caches owned by concurrent batch
-        // jobs or other streams sharing the session
-        dupsOpt.foreach(_.unpersist(blocking = false))
-        sets.unpersist(blocking = false)
-        setPairs.unpersist(blocking = false)
-        novelOut.unpersist(blocking = false)
-        }
-        ()
+    foreachBatchQuery(docsStream, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val toks = graft.functions.TextAnalysis.wordTokens(org.apache.spark.sql.functions.col("text"))
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val corpusExists = {
+        val p = new org.apache.hadoop.fs.Path(corpusPath)
+        p.getFileSystem(hconf).exists(p)
       }
-      .start()
+      // A PRE-EXISTING corpus must be in the index before the first
+      // probe: building the index from this batch's novel docs alone
+      // would leave every standing-corpus doc invisible to later
+      // batches' probes (they probe the index only), silently
+      // re-admitting their near-dups. One-time cost, then O(batch).
+      indexPath.foreach { ix =>
+        if (corpusExists && !graft.functions.BandIndex.exists(spark, ix))
+          graft.functions.BandIndex.build(spark.read.parquet(corpusPath), "doc_id", toks, ix)
+      }
+      val indexed = indexPath.filter(ix => graft.functions.BandIndex.exists(spark, ix))
+
+      // ---- regime gate (the BpeTrain/CC pattern): ONE distributed
+      // prep pass hashes every doc's tokens; a micro-batch under the
+      // gate continues on the driver (MicroDedup — identical
+      // arithmetic, none of the ~6 fixed-latency jobs the
+      // distributed batch-internal stage pays), and the collect is
+      // bounded BY the gate, never by the stream. A trigger bounds
+      // batches by construction, so streaming ingest lives in this
+      // regime; the distributed body below is the over-gate
+      // fallback and the correctness reference (StreamingSpec runs
+      // both and pins identical corpus contents).
+      // the prep projection also computes the 128-hash signature and
+      // its 32 band keys IN the distributed pass — the one
+      // compute-heavy term (38M hash ops at 10k docs), which would
+      // otherwise run single-threaded on the driver
+      val f = org.apache.spark.sql.functions
+      // a MemoryStream/file micro-batch often arrives as ONE
+      // partition — without the repartition the 128-hash signature
+      // pass runs on a single core
+      val prepped = batch.repartition(spark.sparkContext.defaultParallelism)
+        .select(col("doc_id"),
+        f.array_sort(f.transform(f.array_distinct(toks), tk => f.xxhash64(tk))).as("toks"))
+        .withColumn("__sig", graft.functions.MinHashSig.column(col("toks"), 128))
+        .select(col("doc_id"), col("toks"),
+          f.array((0 until 32).map(b =>
+            f.xxhash64(f.slice(col("__sig"), b * 4 + 1, 4))): _*).as("bands"))
+      def dbg[A](label: String)(x: => A): A =
+        if (sys.env.contains("SPARK_GRAFT_DEDUP_DEBUG")) {
+          val t0 = System.nanoTime()
+          val r = x
+          println(f"[dedup-dbg] $label%-22s ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
+          r
+        } else x
+      val collected = dbg("prep+collect")(prepped.limit(microGate + 1).collect())
+      if (collected.length <= microGate) {
+        import spark.implicits._
+        val docs = collected.map(r =>
+          (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray))
+        val micro = dbg("MicroDedup.run")(graft.functions.MicroDedup.run(
+          docs, threshold = threshold, maxBucketSize = 4096))
+        val dupIds: Set[Long] = indexed match {
+          case Some(ix) =>
+            dbg("probeDupIds")(graft.functions.BandIndex.probeDupIdsPrepped(
+              spark, ix, micro.survivors, threshold = threshold).toSet)
+          case None if corpusExists =>
+            val survivorIds = micro.survivors.map(_.id).toSeq.toDF("doc_id")
+            val dups = graft.functions.NearDup.minHashProbePairs(
+              spark.read.parquet(corpusPath),
+              batch.join(broadcast(survivorIds), Seq("doc_id"), "left_semi"),
+              "doc_id", toks, threshold = threshold)
+            val ids = dups.select(col("probe_id")).distinct()
+              .collect().map(_.getLong(0)).toSet
+            dups.unpersist(blocking = false)
+            ids
+          case None => Set.empty
+        }
+        val novelSurvivors = micro.survivors.filterNot(s => dupIds(s.id))
+        val novelIds = novelSurvivors.map(_.id).toSeq.toDF("doc_id")
+        // corpus append and index append write to independent paths
+        // — run the actions concurrently (both must COMPLETE before
+        // the batch commits, so the at-least-once story is unchanged)
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val wCorpus = Future {
+          batch.join(broadcast(novelIds), Seq("doc_id"), "left_semi")
+            .withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(corpusPath)
+        }
+        val wIndex = Future {
+          indexPath.foreach { ix =>
+            val mode = if (graft.functions.BandIndex.exists(spark, ix)) "append" else "overwrite"
+            graft.functions.BandIndex.writePrepped(spark, novelSurvivors, ix, mode)
+          }
+        }
+        dbg("writes (corpus||index)") {
+          Await.result(wCorpus, scala.concurrent.duration.Duration.Inf)
+          Await.result(wIndex, scala.concurrent.duration.Duration.Inf)
+        }
+      } else {
+      // ---- distributed fallback: batch-internal collapse via LSH
+      // set pairs + connected components, min doc_id per group
+      val (sets, setPairs) = graft.functions.NearDup.minHashSetPairs(
+        batch, "doc_id", toks, numHashes = 128, bands = 32, threshold = threshold)
+      val assigned = graft.operators.ConnectedComponents.dedupAssignmentBySets(sets, setPairs)
+      val batchSurvivors = batch.join(
+        assigned.filter(col("is_canonical")).select(col("doc_id")), Seq("doc_id"), "left_semi")
+      val dupsOpt = indexed match {
+        case Some(ix) =>
+          Some(graft.functions.BandIndex.probePairs(
+            spark, ix, batchSurvivors, "doc_id", toks, threshold = threshold))
+        case None if corpusExists =>
+          Some(graft.functions.NearDup.minHashProbePairs(
+            spark.read.parquet(corpusPath), batchSurvivors, "doc_id", toks,
+            threshold = threshold))
+        case None => None
+      }
+      val novel = dupsOpt match {
+        case Some(dups) => batchSurvivors.join(
+          dups.select(col("probe_id").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+        case None => batchSurvivors
+      }
+      // materialize novel ONCE (it is consumed by the corpus append
+      // and, when indexed, the index append — recomputing it would
+      // re-run the whole probe)
+      val novelOut = novel.withColumn("batch_id", lit(batchId))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      novelOut.write.mode("append").parquet(corpusPath)
+      indexPath.foreach { ix =>
+        if (graft.functions.BandIndex.exists(spark, ix))
+          graft.functions.BandIndex.append(novelOut, "doc_id", toks, ix)
+        else graft.functions.BandIndex.build(novelOut, "doc_id", toks, ix)
+      }
+      // release ONLY the frames this batch persisted — a session-wide
+      // clearCache would also drop caches owned by concurrent batch
+      // jobs or other streams sharing the session
+      dupsOpt.foreach(_.unpersist(blocking = false))
+      sets.unpersist(blocking = false)
+      setPairs.unpersist(blocking = false)
+      novelOut.unpersist(blocking = false)
+      }
+    }
 
   /** Streaming decontamination gate: every micro-batch of documents
     * is probed for word-8-gram overlap against a STATIC benchmark
@@ -468,28 +467,22 @@ object StreamPipeline {
   def contaminationGate(docsStream: DataFrame, benchGrams: DataFrame,
                         cleanPath: String, flaggedPath: String, checkpoint: String,
                         trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t = graft.functions.TextAnalysis
-        val hits = batch
-          .select(col("doc_id"), t.wordTokens(col("text")).as("words"))
-          .select(col("doc_id"), explode(t.distinctNgrams(col("words"), 8)).as("gram"))
-          .join(broadcast(benchGrams.select(col("gram")).distinct()), Seq("gram"))
-          .select(col("doc_id")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        batch.join(hits, Seq("doc_id"), "left_semi")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(flaggedPath)
-        batch.join(hits, Seq("doc_id"), "left_anti")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(cleanPath)
-        hits.unpersist(blocking = false)
-        ()
-      }
-      .start()
+    foreachBatchQuery(docsStream, checkpoint, trigger) { (batch, batchId) =>
+      val t = graft.functions.TextAnalysis
+      val hits = batch
+        .select(col("doc_id"), t.wordTokens(col("text")).as("words"))
+        .select(col("doc_id"), explode(t.distinctNgrams(col("words"), 8)).as("gram"))
+        .join(broadcast(benchGrams.select(col("gram")).distinct()), Seq("gram"))
+        .select(col("doc_id")).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      batch.join(hits, Seq("doc_id"), "left_semi")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(flaggedPath)
+      batch.join(hits, Seq("doc_id"), "left_anti")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(cleanPath)
+      hits.unpersist(blocking = false)
+    }
 
   /** STREAMING BLOCK-LEVEL DEDUP (the live form of q142's
     * exact-substring dedup, one code path —
@@ -512,39 +505,33 @@ object StreamPipeline {
   def blockDedupOnIngest(docsStream: DataFrame, storePath: String, cleanPath: String,
                          checkpoint: String,
                          trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val bd = graft.operators.BlockDedup
-        val blk = bd.blocks(batch, col("doc_id"), col("text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val storeExists = {
-          val p = new org.apache.hadoop.fs.Path(storePath)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-        }
-        // occurrences whose content the store has already seen drop
-        // before the within-batch rule runs (their first occurrence
-        // was in an earlier batch)
-        val novel =
-          if (storeExists)
-            blk.join(spark.read.parquet(storePath).select(col("fp")).distinct(),
-              Seq("fp"), "left_anti")
-          else blk
-        val cleaned = bd.rebuild(batch, col("doc_id"), col("text"), bd.keptOffsets(novel))
-          .select(col("id").as("doc_id"), col("clean").as("text_clean"),
-            col("n_blocks"), col("n_kept"))
-          .withColumn("batch_id", lit(batchId))
-        cleaned.write.mode("append").parquet(cleanPath)
-        novel.select(col("fp")).distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(storePath)
-        blk.unpersist(blocking = false)
-        ()
+    foreachBatchQuery(docsStream, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val bd = graft.operators.BlockDedup
+      val blk = bd.blocks(batch, col("doc_id"), col("text"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val storeExists = {
+        val p = new org.apache.hadoop.fs.Path(storePath)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
       }
-      .start()
+      // occurrences whose content the store has already seen drop
+      // before the within-batch rule runs (their first occurrence
+      // was in an earlier batch)
+      val novel =
+        if (storeExists)
+          blk.join(spark.read.parquet(storePath).select(col("fp")).distinct(),
+            Seq("fp"), "left_anti")
+        else blk
+      val cleaned = bd.rebuild(batch, col("doc_id"), col("text"), bd.keptOffsets(novel))
+        .select(col("id").as("doc_id"), col("clean").as("text_clean"),
+          col("n_blocks"), col("n_kept"))
+        .withColumn("batch_id", lit(batchId))
+      cleaned.write.mode("append").parquet(cleanPath)
+      novel.select(col("fp")).distinct()
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(storePath)
+      blk.unpersist(blocking = false)
+    }
 
   /** STREAMING IMPORTANCE GATE (the live form of q141's DSIR batch
     * scoring, one code path — [[graft.functions.Dsir]]): every
@@ -563,29 +550,23 @@ object StreamPipeline {
   def importanceGate(docsStream: DataFrame, lamModel: DataFrame,
                      keepPath: String, flaggedPath: String, checkpoint: String,
                      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val d = graft.functions.Dsir
-        val scored = d.score(d.slots(batch, col("doc_id"), col("text")), lamModel)
-          .withColumnRenamed("id", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val routed = batch
-          .join(scored, Seq("doc_id"), "left")
-          .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
-          .withColumn("score_fp", coalesce(col("score_fp"), lit(0L)))
-          .withColumn("keep", coalesce(col("keep"), lit(false)))
-          .withColumn("batch_id", lit(batchId))
-        routed.filter(col("keep")).drop("keep")
-          .write.mode("append").parquet(keepPath)
-        routed.filter(!col("keep")).drop("keep")
-          .write.mode("append").parquet(flaggedPath)
-        scored.unpersist(blocking = false)
-        ()
-      }
-      .start()
+    foreachBatchQuery(docsStream, checkpoint, trigger) { (batch, batchId) =>
+      val d = graft.functions.Dsir
+      val scored = d.score(d.slots(batch, col("doc_id"), col("text")), lamModel)
+        .withColumnRenamed("id", "doc_id")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val routed = batch
+        .join(scored, Seq("doc_id"), "left")
+        .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
+        .withColumn("score_fp", coalesce(col("score_fp"), lit(0L)))
+        .withColumn("keep", coalesce(col("keep"), lit(false)))
+        .withColumn("batch_id", lit(batchId))
+      routed.filter(col("keep")).drop("keep")
+        .write.mode("append").parquet(keepPath)
+      routed.filter(!col("keep")).drop("keep")
+        .write.mode("append").parquet(flaggedPath)
+      scored.unpersist(blocking = false)
+    }
 
   /** STREAMING INCREMENTAL PANEL MAINTENANCE: the q172 daily market
     * panel as a LIVE materialized view — each micro-batch of raw ticks
@@ -605,32 +586,26 @@ object StreamPipeline {
   def panelMaintain(ticksStream: DataFrame, tickStore: String, panelPath: String,
                     checkpoint: String,
                     trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    ticksStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val stamped = batch
-          .withColumn("day", to_date(col("ts")))
-          .withColumn("batch_id", lit(batchId))
-        stamped.write.mode("append").partitionBy("day").parquet(tickStore)
-        val days = stamped.select(col("day")).distinct()
-          .collect().map(_.getDate(0)) // bounded: a micro-batch spans few days
-        val affected = spark.read.parquet(tickStore)
-          .filter(col("day").isin(days.toIndexedSeq: _*)) // partition-pruned
-          .dropDuplicates("event_id", "batch_id")
-          .drop("day", "batch_id")
-        val fresh = graft.operators.DailyPanel.compute(affected)
-        val merged = (if (new java.io.File(panelPath).exists())
-            graft.operators.MergeUpsert.upsert(
-              spark.read.parquet(panelPath), fresh, Seq("event_type", "day"))
-          else fresh)
-          .localCheckpoint(true) // materialize BEFORE overwriting the path being read
-        merged.write.mode("overwrite").parquet(panelPath)
-        ()
-      }
-      .start()
+    foreachBatchQuery(ticksStream, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val stamped = batch
+        .withColumn("day", to_date(col("ts")))
+        .withColumn("batch_id", lit(batchId))
+      stamped.write.mode("append").partitionBy("day").parquet(tickStore)
+      val days = stamped.select(col("day")).distinct()
+        .collect().map(_.getDate(0)) // bounded: a micro-batch spans few days
+      val affected = spark.read.parquet(tickStore)
+        .filter(col("day").isin(days.toIndexedSeq: _*)) // partition-pruned
+        .dropDuplicates("event_id", "batch_id")
+        .drop("day", "batch_id")
+      val fresh = graft.operators.DailyPanel.compute(affected)
+      val merged = (if (new java.io.File(panelPath).exists())
+          graft.operators.MergeUpsert.upsert(
+            spark.read.parquet(panelPath), fresh, Seq("event_type", "day"))
+        else fresh)
+        .localCheckpoint(true) // materialize BEFORE overwriting the path being read
+      merged.write.mode("overwrite").parquet(panelPath)
+    }
 
   /** STREAMING PER-SOURCE ADAPTIVE QUALITY GATE: the live form of the
     * q161 batch gate — every micro-batch's documents are scored with
@@ -656,24 +631,18 @@ object StreamPipeline {
     val cuts = qg.cutoffs(
       qg.scored(refCorpus).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       .localCheckpoint(true)
-    docsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val routed = batch
-          .withColumn("quality_fp", qg.scoreFp(col("text")))
-          .join(broadcast(cuts), Seq("source"), "left")
-          .withColumn("kept", col("quality_fp").isNotNull &&
-            (col("q_cut_fp").isNull || col("quality_fp") >= col("q_cut_fp")))
-          .withColumn("batch_id", lit(batchId))
-        routed.filter(col("kept")).drop("kept")
-          .write.mode("append").parquet(keepPath)
-        routed.filter(!col("kept")).drop("kept")
-          .write.mode("append").parquet(flaggedPath)
-        ()
-      }
-      .start()
+    foreachBatchQuery(docsStream, checkpoint, trigger) { (batch, batchId) =>
+      val routed = batch
+        .withColumn("quality_fp", qg.scoreFp(col("text")))
+        .join(broadcast(cuts), Seq("source"), "left")
+        .withColumn("kept", col("quality_fp").isNotNull &&
+          (col("q_cut_fp").isNull || col("quality_fp") >= col("q_cut_fp")))
+        .withColumn("batch_id", lit(batchId))
+      routed.filter(col("kept")).drop("kept")
+        .write.mode("append").parquet(keepPath)
+      routed.filter(!col("kept")).drop("kept")
+        .write.mode("append").parquet(flaggedPath)
+    }
   }
 
   /** STREAMING DISTRIBUTION-DRIFT GATE: the live form of the q122
@@ -696,24 +665,18 @@ object StreamPipeline {
                 checkpoint: String,
                 trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery = {
     val checks = graft.operators.Checks.driftChecks(snapshot, tol)
-    stream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val report = graft.operators.Checks.report(batch, checks)
-            .withColumn("batch_id", lit(batchId))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          report.write.mode("append").parquet(reportPath)
-          val drifted = report.filter(!col("pass")).limit(1).count() > 0
-          report.unpersist(blocking = false)
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(if (drifted) flaggedPath else cleanPath)
-        }
-        ()
+    foreachBatchQuery(stream, checkpoint, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val report = graft.operators.Checks.report(batch, checks)
+          .withColumn("batch_id", lit(batchId))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        report.write.mode("append").parquet(reportPath)
+        val drifted = report.filter(!col("pass")).limit(1).count() > 0
+        report.unpersist(blocking = false)
+        batch.withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(if (drifted) flaggedPath else cleanPath)
       }
-      .start()
+    }
   }
 
   /** Stream-stream time-bounded enrichment: every tick joins the
@@ -738,88 +701,42 @@ object StreamPipeline {
     * micro-batch, build the batch's partial sketches — Count-Min
     * cells over `keyCol` and sig-digit quantile buckets over
     * `valueCol` — merge them with the persisted sketch store at
-    * `sketchPath`, and swap the merged store into place atomically
-    * (readers never see a half-written sketch; a crash mid-swap heals
-    * on the next batch — [[graft.batch.AtomicSwap]]).
+    * `sketchPath`, each store committed through
+    * [[graft.batch.StoreCommit]] (readers never see a half-written
+    * sketch; a replay skips a store that already holds its batch).
     *
     * This is the live-statistics shape for a 100 TB ingest: each batch
     * costs O(batch + sketch) regardless of corpus size because both
     * sketches are mergeable summaries (cell-wise sum / bucket-wise
-    * sum), and the store stays a few thousand rows forever. Replays
-    * are idempotent per store: each store is stamped with the batch id
-    * it last merged (marker file swapped in with the data), and a
-    * replayed batch skips any store that already carries its stamp —
-    * so a crash BETWEEN the two stores' swaps no longer double-counts
-    * the batch into the already-merged store on recovery. Estimates
+    * sum), and the store stays a few thousand rows forever. Estimates
     * (heavy keys, quantiles) read the same store via
     * [[graft.functions.Sketches]] at any time.
     */
   def maintainSketches(events: DataFrame, sketchPath: String, checkpoint: String,
                        keyCol: String, valueCol: String,
                        trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeSketchBatch(batch, sketchPath, keyCol, valueCol, batchId)
-      }
-      .start()
+    foreachBatchQuery(events, checkpoint, trigger)(mergeSketchBatch(_, sketchPath, keyCol, valueCol, _))
 
   /** One [[maintainSketches]] micro-batch: merge the batch's partial
-    * sketches into the durable stores, idempotently per (store,
-    * batchId).
-    *
-    * Each store carries a `_graft_batch_<id>` marker file (written
-    * into the tmp dir, so it swaps in atomically WITH the data;
-    * parquet readers skip `_`-prefixed files). The two stores swap in
-    * sequence, so a crash between the swaps leaves batch N in one
-    * store but not the other; on the checkpoint's replay of batch N,
-    * a store whose marker already says N is left untouched instead of
-    * double-counting the batch into its already-merged cells. Only
-    * the latest marker survives a swap (the tmp dir is fresh), and
-    * foreachBatch only ever replays the latest batch, so one marker
-    * per store suffices. */
+    * sketches into the two durable stores, each committed through
+    * [[graft.batch.StoreCommit]] (a crash between the two swaps replays
+    * into the unmerged store only). */
   private[graft] def mergeSketchBatch(batch: DataFrame, sketchPath: String,
                                       keyCol: String, valueCol: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
+    import graft.functions.Sketches
     val cellsP = s"$sketchPath/cms"
     val bucketsP = s"$sketchPath/qbuckets"
-    // heal a torn swap BEFORE any exists()/read of the stores — a
-    // crash between AtomicSwap's live→old and tmp→live renames would
-    // otherwise read "no store", merge batch-only, and swap that over
-    // the restored .old (discarding all accumulated state)
-    graft.batch.AtomicSwap.heal(hconf, cellsP)
-    graft.batch.AtomicSwap.heal(hconf, bucketsP)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
+    val stores = StoreCommit.open(batch.sparkSession, batchId, cellsP, bucketsP)
+    val cents = floor(col(valueCol) * 100 + lit(0.5)).cast("long")
+    if (!stores.applied(cellsP)) {
+      val partialCells = Sketches.countMinCellsDirect(batch, col(keyCol))
+      stores.commit(cellsP,
+        stores.read(cellsP).fold(partialCells)(Sketches.mergeCells(_, partialCells)))
     }
-    def applied(p: String): Boolean = exists(s"$p/_graft_batch_$batchId")
-    def writeAndSwap(merged: DataFrame, p: String): Unit = {
-      merged.coalesce(1).write.mode("overwrite").parquet(p + ".tmp")
-      val marker = new org.apache.hadoop.fs.Path(s"$p.tmp/_graft_batch_$batchId")
-      marker.getFileSystem(hconf).create(marker, true).close()
-      graft.batch.AtomicSwap.swapInto(hconf, p + ".tmp", p)
-    }
-    val cents = org.apache.spark.sql.functions
-      .floor(col(valueCol) * 100 + org.apache.spark.sql.functions.lit(0.5)).cast("long")
-    if (!applied(cellsP)) {
-      val partialCells = graft.functions.Sketches.countMinCellsDirect(batch, col(keyCol))
-      val mergedCells =
-        if (exists(cellsP))
-          graft.functions.Sketches.mergeCells(spark.read.parquet(cellsP), partialCells)
-        else partialCells
-      writeAndSwap(mergedCells, cellsP)
-    }
-    if (!applied(bucketsP)) {
-      val partialBuckets = graft.functions.Sketches.sigBuckets(batch, cents)
-      val mergedBuckets =
-        if (exists(bucketsP))
-          graft.functions.Sketches.mergeSigBuckets(spark.read.parquet(bucketsP), partialBuckets)
-        else partialBuckets
-      writeAndSwap(mergedBuckets, bucketsP)
+    if (!stores.applied(bucketsP)) {
+      val partialBuckets = Sketches.sigBuckets(batch, cents)
+      stores.commit(bucketsP,
+        stores.read(bucketsP).fold(partialBuckets)(Sketches.mergeSigBuckets(_, partialBuckets)))
     }
   }
 
@@ -832,60 +749,39 @@ object StreamPipeline {
     * the batch kernel ([[graft.functions.PowerIteration.top]]), so a
     * maintained store serves a component BITWISE equal to a batch
     * rebuild over the same corpus — no approximation, no decay.
-    * Idempotence: the mergeSketchBatch marker contract (the store
-    * swaps atomically WITH a `_graft_batch_<id>` marker; a replayed
-    * batch whose marker already landed is skipped instead of
-    * double-counted). Per-batch cost is O(batch·dim²) map work plus a
-    * 4161-row store rewrite — state is bounded by the embedding
-    * dimension, never by the corpus. */
+    * Idempotence: [[graft.batch.StoreCommit]]. Per-batch cost is
+    * O(batch·dim²) map work plus a 4161-row store rewrite — state is
+    * bounded by the embedding dimension, never by the corpus. */
   def maintainGram(vectorStream: DataFrame, gramPath: String, checkpoint: String,
                    vecCol: String = "embedding", dim: Int = 64,
                    trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    vectorStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeGramBatch(batch, gramPath, vecCol, dim, batchId)
-      }
-      .start()
+    foreachBatchQuery(vectorStream, checkpoint, trigger)(mergeGramBatch(_, gramPath, vecCol, dim, _))
 
   /** One [[maintainGram]] micro-batch: fold the batch's Gram partial
     * into the store, idempotently per batchId. */
   private[graft] def mergeGramBatch(batch: DataFrame, gramPath: String,
                                     vecCol: String, dim: Int, batchId: Long): Unit = {
     import graft.functions.{OuterProductSum, PowerIteration}
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val hp = new org.apache.hadoop.fs.Path(gramPath)
-    val fs = hp.getFileSystem(hconf)
-    // heal a torn swap BEFORE probing the store (see mergeSketchBatch)
-    graft.batch.AtomicSwap.heal(hconf, gramPath)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$gramPath/_graft_batch_$batchId"))) return
+    val store = StoreCommit.open(batch.sparkSession, batchId, gramPath)
+    if (store.applied(gramPath)) return
     if (batch.isEmpty) return
     val partial = batch
       .agg(OuterProductSum.column(PowerIteration.quantize(col(vecCol)), dim).as("b"))
       .select(posexplode(col("b")).as(Seq("k", "v")))
-    val merged =
-      if (fs.exists(hp))
-        spark.read.parquet(gramPath).unionByName(partial)
-          .groupBy(col("k")).agg(sum(col("v")).cast("long").as("v"))
-      else partial
-    merged.coalesce(1).write.mode("overwrite").parquet(gramPath + ".tmp")
+    store.stage(gramPath,
+      mergeBy(store.read(gramPath), partial, Seq("k"), sum(col("v")).cast("long").as("v")))
     // The in-aggregate addExact catches per-batch overflow, but this
     // store-side sum is a plain long sum that wraps silently; the
     // documented exactness bound (OuterProductSum doc) is ~9e8 rows at
     // the 1e-4 quantization. Gate on the merged row count BEFORE the
     // swap: a violation fails the batch loudly and leaves the store at
     // its last good state instead of degrading it.
-    val mergedN = spark.read.parquet(gramPath + ".tmp")
+    val mergedN = store.staged(gramPath)
       .filter(col("k") === dim * dim + dim).head().getAs[Long]("v")
     require(mergedN <= 900000000L,
       s"maintainGram: merged row count $mergedN exceeds the ~9e8 exactness bound of " +
         "the long Gram accumulation — promote the store merge to BigInt/decimal")
-    val marker = new org.apache.hadoop.fs.Path(s"$gramPath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, gramPath + ".tmp", gramPath)
+    store.seal(gramPath)
   }
 
   /** The maintained Gram store as the flat buffer [[graft.functions
@@ -907,23 +803,15 @@ object StreamPipeline {
     * either kind identically. Assumes per-user event-time-ordered
     * arrival across batches (the watermark contract every feed here
     * honors); an out-of-order event would need the panelMaintain
-    * touched-recompute pattern instead. Idempotence: both stores
-    * swap atomically with batch markers; counts commit BEFORE carry,
-    * so a torn crash replays against the OLD carry — identical
-    * input, counts skip on their marker, carry heals. Per-batch cost
+    * touched-recompute pattern instead. Idempotence and crash safety:
+    * [[graft.batch.StoreCommit]] (counts commit before carry; a full
+    * replay returns before the late-row check). Per-batch cost
     * is O(batch + |users touched|); neither store grows with event
     * volume. */
   def transitionMaintain(eventsStream: DataFrame, countsPath: String, carryPath: String,
                          checkpoint: String,
                          trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        transitionBatch(batch, countsPath, carryPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(transitionBatch(_, countsPath, carryPath, _))
 
   /** Observability for [[transitionBatch]]'s in-order-arrival
     * assumption: cumulative count of rows that arrived with an event
@@ -938,26 +826,14 @@ object StreamPipeline {
   private[graft] def transitionBatch(batch: DataFrame, countsPath: String,
                                      carryPath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // heal torn swaps BEFORE any exists()/read (see mergeSketchBatch)
-    graft.batch.AtomicSwap.heal(hconf, countsPath)
-    graft.batch.AtomicSwap.heal(hconf, carryPath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    def applied(p: String): Boolean = exists(s"$p/_graft_batch_$batchId")
-    def writeAndSwap(df: DataFrame, p: String): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(p + ".tmp")
-      val marker = new org.apache.hadoop.fs.Path(s"$p.tmp/_graft_batch_$batchId")
-      marker.getFileSystem(hconf).create(marker, true).close()
-      graft.batch.AtomicSwap.swapInto(hconf, p + ".tmp", p)
-    }
+    val stores = StoreCommit.open(batch.sparkSession, batchId, countsPath, carryPath)
+    val (countsDone, carryDone) = (stores.applied(countsPath), stores.applied(carryPath))
+    if (countsDone && carryDone) return
     val cols = Seq("user_id", "ts", "event_id", "event_type").map(col)
-    val uni = (if (exists(carryPath)) {
-        val carry = spark.read.parquet(carryPath).select(cols: _*)
-        val b = batch.select(cols: _*)
+    val b = batch.select(cols: _*)
+    val uni = (stores.read(carryPath) match {
+      case Some(store) =>
+        val carry = store.select(cols: _*)
         // in-order-arrival assumption made OBSERVABLE: a batch row at
         // or before its user's carried last-event time is an
         // event-time regression across micro-batches — the one input
@@ -980,26 +856,18 @@ object StreamPipeline {
               "may diverge from a batch rebuild")
         }
         b.unionByName(carry)
-      } else batch.select(cols: _*))
-      .localCheckpoint(true) // one snapshot feeds BOTH stores (and survives the carry overwrite)
-    if (!applied(countsPath)) {
-      val fresh = graft.operators.Transitions.counts(uni)
-      val merged =
-        if (exists(countsPath))
-          spark.read.parquet(countsPath).unionByName(fresh)
-            .groupBy(col("from_type"), col("to_type"))
-            .agg(sum(col("n_trans")).cast("long").as("n_trans"))
-        else fresh
-      writeAndSwap(merged, countsPath)
-    }
-    if (!applied(carryPath)) {
-      val newCarry = uni.groupBy(col("user_id"))
+      case None => b
+    }).localCheckpoint(true) // one snapshot feeds BOTH stores (and survives the carry overwrite)
+    if (!countsDone)
+      stores.commit(countsPath, mergeBy(stores.read(countsPath),
+        graft.operators.Transitions.counts(uni), Seq("from_type", "to_type"),
+        sum(col("n_trans")).cast("long").as("n_trans")))
+    if (!carryDone)
+      stores.commit(carryPath, uni.groupBy(col("user_id"))
         .agg(max_by(struct(col("ts"), col("event_id"), col("event_type")),
           struct(col("ts"), col("event_id"))).as("last"))
         .select(col("user_id"), col("last.ts").as("ts"),
-          col("last.event_id").as("event_id"), col("last.event_type").as("event_type"))
-      writeAndSwap(newCarry, carryPath)
-    }
+          col("last.event_id").as("event_id"), col("last.event_type").as("event_type")))
   }
 
   /** STREAMING FUNNEL MAINTENANCE: the live form of q183's
@@ -1015,43 +883,21 @@ object StreamPipeline {
     * the 4-row summary exactly equal under any batch split, restart
     * included). The 4-row summary reads from the store at any time
     * via [[graft.operators.Funnel.summary]]. Idempotence and crash
-    * safety: the transitionBatch contract (batch-id marker swapped
-    * atomically WITH the store; torn swaps healed BEFORE the store is
-    * probed). Per-batch cost is O(batch + |users|); the store is
-    * user-grain and never event-grain. */
+    * safety: [[graft.batch.StoreCommit]]. Per-batch cost is
+    * O(batch + |users|); the store is user-grain and never event-grain. */
   def funnelMaintain(eventsStream: DataFrame, storePath: String, checkpoint: String,
                      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        funnelBatch(batch, storePath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(funnelBatch(_, storePath, _))
 
   /** One [[funnelMaintain]] micro-batch. */
   private[graft] def funnelBatch(batch: DataFrame, storePath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, storePath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
+    StoreCommit.fold(batch.sparkSession, storePath, batchId) { store =>
+      import graft.operators.Funnel
+      val b = batch.select(col("user_id"), col("ts"), col("event_type"))
+      Funnel.stageTimes(store.fold(b)(st => b.unionByName(Funnel.storeAsEvents(st)))
+        .localCheckpoint(true)) // 4 consumers in stageTimes; survives the store overwrite
     }
-    if (exists(s"$storePath/_graft_batch_$batchId")) return
-    val cols = Seq("user_id", "ts", "event_type").map(col)
-    val uni = (if (exists(storePath))
-        batch.select(cols: _*)
-          .unionByName(graft.operators.Funnel.storeAsEvents(spark.read.parquet(storePath)))
-      else batch.select(cols: _*))
-      .localCheckpoint(true) // 4 consumers in stageTimes; survives the store overwrite
-    val merged = graft.operators.Funnel.stageTimes(uni)
-    merged.coalesce(1).write.mode("overwrite").parquet(storePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$storePath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, storePath + ".tmp", storePath)
   }
 
   /** STREAMING RETENTION MAINTENANCE: the live form of q184's cohort
@@ -1064,42 +910,22 @@ object StreamPipeline {
     * ([[graft.operators.Retention.activity]]) over (store-as-events ∪
     * batch); the triangle reads from the store at any time via
     * [[graft.operators.Retention.triangle]]. Idempotence/crash
-    * safety: the transitionBatch marker + heal contract. The store is
+    * safety: [[graft.batch.StoreCommit]]. The store is
     * user×active-days grain — far below event grain; the merge is one
     * map-side-combined distinct per batch. */
   def retentionMaintain(eventsStream: DataFrame, storePath: String, checkpoint: String,
                         trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        retentionBatch(batch, storePath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(retentionBatch(_, storePath, _))
 
   /** One [[retentionMaintain]] micro-batch. */
   private[graft] def retentionBatch(batch: DataFrame, storePath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, storePath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
+    StoreCommit.fold(batch.sparkSession, storePath, batchId) { store =>
+      import graft.operators.Retention
+      val b = batch.select(col("user_id"), col("ts"))
+      Retention.activity(store.fold(b)(st => b.unionByName(Retention.storeAsEvents(st)))
+        .localCheckpoint(true)) // survives the store overwrite
     }
-    if (exists(s"$storePath/_graft_batch_$batchId")) return
-    val cols = Seq("user_id", "ts").map(col)
-    val uni = (if (exists(storePath))
-        batch.select(cols: _*)
-          .unionByName(graft.operators.Retention.storeAsEvents(spark.read.parquet(storePath)))
-      else batch.select(cols: _*))
-      .localCheckpoint(true) // survives the store overwrite
-    val merged = graft.operators.Retention.activity(uni)
-    merged.coalesce(1).write.mode("overwrite").parquet(storePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$storePath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, storePath + ".tmp", storePath)
   }
 
   /** STREAMING TABLE-PROFILE MAINTENANCE: live per-column data-quality
@@ -1112,42 +938,23 @@ object StreamPipeline {
     * BIT-IDENTICAL to a batch rebuild over the same rows, under any
     * arrival order (ProfileStreamSpec). Per-batch cost is one batch
     * scan + a |cols|-row array merge; the store is constant-size
-    * forever. Idempotence/crash safety: the transitionBatch marker +
-    * heal contract. Serve via
+    * forever. Idempotence/crash safety: [[graft.batch.StoreCommit]].
+    * Serve via
     * [[graft.operators.TableProfile.profile]]. */
   def profileMaintain(rowsStream: DataFrame, storePath: String, checkpoint: String,
                       colTypes: Seq[(String, String)],
                       trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    rowsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        profileBatch(batch, storePath, colTypes, batchId)
-      }
-      .start()
+    foreachBatchQuery(rowsStream, checkpoint, trigger)(profileBatch(_, storePath, colTypes, _))
 
   /** One [[profileMaintain]] micro-batch. */
   private[graft] def profileBatch(batch: DataFrame, storePath: String,
                                   colTypes: Seq[(String, String)], batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, storePath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
+    StoreCommit.fold(batch.sparkSession, storePath, batchId) { store =>
+      import graft.operators.TableProfile
+      val bState = TableProfile.state(batch, colTypes)
+      store.fold(bState)(TableProfile.merge(_, bState))
     }
-    if (exists(s"$storePath/_graft_batch_$batchId")) return
-    val bState = graft.operators.TableProfile.state(batch, colTypes)
-    val merged =
-      if (exists(storePath))
-        graft.operators.TableProfile.merge(spark.read.parquet(storePath), bState)
-      else bState
-    merged.coalesce(1).write.mode("overwrite").parquet(storePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$storePath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, storePath + ".tmp", storePath)
   }
 
   /** STREAMING MARKOV-ATTRIBUTION MAINTENANCE: the live form of
@@ -1166,53 +973,27 @@ object StreamPipeline {
     * boundary). One code path: the per-batch extraction is
     * [[graft.operators.Markov]]'s signal pass over (carry ∪ batch);
     * with zero carry rows the same pass IS the batch query.
-    * Idempotence/crash safety: the transitionBatch contract (markers
-    * swap with the data, heal BEFORE reads, counts commit before
-    * carry so a torn replay reproduces identical input). Per-batch
+    * Idempotence/crash safety: [[graft.batch.StoreCommit]] (counts
+    * commit before carry). Per-batch
     * cost O(batch + |users touched|); neither store grows with event
     * volume. */
   def attributionMaintain(eventsStream: DataFrame, countsPath: String, carryPath: String,
                           checkpoint: String,
                           trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        attributionBatch(batch, countsPath, carryPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(attributionBatch(_, countsPath, carryPath, _))
 
   /** One [[attributionMaintain]] micro-batch. */
   private[graft] def attributionBatch(batch: DataFrame, countsPath: String,
                                       carryPath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, countsPath)
-    graft.batch.AtomicSwap.heal(hconf, carryPath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    def applied(p: String): Boolean = exists(s"$p/_graft_batch_$batchId")
-    def writeAndSwap(df: DataFrame, p: String): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(p + ".tmp")
-      val marker = new org.apache.hadoop.fs.Path(s"$p.tmp/_graft_batch_$batchId")
-      marker.getFileSystem(hconf).create(marker, true).close()
-      graft.batch.AtomicSwap.swapInto(hconf, p + ".tmp", p)
-    }
-    val carry = if (exists(carryPath)) Some(spark.read.parquet(carryPath)) else None
-    val (perm, nextCarry) = graft.operators.Markov.streamEdges(carry, batch)
-    if (!applied(countsPath)) {
-      val merged =
-        if (exists(countsPath))
-          spark.read.parquet(countsPath).unionByName(perm)
-            .groupBy(col("f"), col("t2")).agg(sum(col("n")).cast("long").as("n"))
-        else perm
-      writeAndSwap(merged, countsPath)
-    }
-    if (!applied(carryPath)) writeAndSwap(nextCarry, carryPath)
+    val stores = StoreCommit.open(batch.sparkSession, batchId, countsPath, carryPath)
+    val (countsDone, carryDone) = (stores.applied(countsPath), stores.applied(carryPath))
+    if (countsDone && carryDone) return
+    val (perm, nextCarry) = graft.operators.Markov.streamEdges(stores.read(carryPath), batch)
+    if (!countsDone)
+      stores.commit(countsPath, mergeBy(stores.read(countsPath), perm, Seq("f", "t2"),
+        sum(col("n")).cast("long").as("n")))
+    if (!carryDone) stores.commit(carryPath, nextCarry)
   }
 
   /** The q196 result served from the maintained stores: permanent
@@ -1242,38 +1023,19 @@ object StreamPipeline {
     * [[pairsServe]] = q198's pairs screen via pairsFromCloses — the
     * live risk panel and stat-arb monitor, each a ≤ |instruments|·
     * |days| computation at any feed volume. Idempotence/crash
-    * safety: the rfmBatch marker + heal contract. */
+    * safety: [[graft.batch.StoreCommit]]. */
   def closesMaintain(ticksStream: DataFrame, storePath: String, checkpoint: String,
                      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    ticksStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        closesBatch(batch, storePath, batchId)
-      }
-      .start()
+    foreachBatchQuery(ticksStream, checkpoint, trigger)(closesBatch(_, storePath, _))
 
   /** One [[closesMaintain]] micro-batch. */
   private[graft] def closesBatch(batch: DataFrame, storePath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, storePath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
+    StoreCommit.fold(batch.sparkSession, storePath, batchId) { store =>
+      import graft.operators.DailyCloses
+      val bState = DailyCloses.state(batch)
+      store.fold(bState)(DailyCloses.merge(_, bState))
     }
-    if (exists(s"$storePath/_graft_batch_$batchId")) return
-    val bState = graft.operators.DailyCloses.state(batch)
-    val merged =
-      if (exists(storePath))
-        graft.operators.DailyCloses.merge(spark.read.parquet(storePath), bState)
-      else bState
-    merged.coalesce(1).write.mode("overwrite").parquet(storePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$storePath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, storePath + ".tmp", storePath)
   }
 
   /** STREAMING PATH-TRIGRAM MAINTENANCE: q204's navigation trigrams
@@ -1286,65 +1048,39 @@ object StreamPipeline {
     * provenance filter turns a contract violation into an undercount
     * instead of a double count. ONE code path with q204
     * (operators.Paths over the shared Transitions gap logic).
-    * Idempotence/crash safety: marker + heal; counts commit BEFORE
-    * carry. */
+    * Idempotence/crash safety: [[graft.batch.StoreCommit]] (counts
+    * commit before carry). */
   def pathsMaintain(eventsStream: DataFrame, countsPath: String, carryPath: String,
                     checkpoint: String,
                     trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        pathsBatch(batch, countsPath, carryPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(pathsBatch(_, countsPath, carryPath, _))
 
   /** One [[pathsMaintain]] micro-batch. */
   private[graft] def pathsBatch(batch: DataFrame, countsPath: String,
                                 carryPath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, countsPath)
-    graft.batch.AtomicSwap.heal(hconf, carryPath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    def applied(p: String): Boolean = exists(s"$p/_graft_batch_$batchId")
-    def writeAndSwap(df: DataFrame, p: String): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(p + ".tmp")
-      val marker = new org.apache.hadoop.fs.Path(s"$p.tmp/_graft_batch_$batchId")
-      marker.getFileSystem(hconf).create(marker, true).close()
-      graft.batch.AtomicSwap.swapInto(hconf, p + ".tmp", p)
-    }
+    val stores = StoreCommit.open(batch.sparkSession, batchId, countsPath, carryPath)
+    val (countsDone, carryDone) = (stores.applied(countsPath), stores.applied(carryPath))
+    if (countsDone && carryDone) return
     val cols = Seq("user_id", "ts", "event_id", "event_type").map(col)
-    val uni = (if (exists(carryPath)) {
-        spark.read.parquet(carryPath).select(cols: _*).withColumn("__carried", lit(true))
-          .unionByName(batch.select(cols: _*).withColumn("__carried", lit(false)))
-      } else batch.select(cols: _*).withColumn("__carried", lit(false)))
+    val b = batch.select(cols: _*).withColumn("__carried", lit(false))
+    val uni = stores.read(carryPath)
+      .fold(b)(_.select(cols: _*).withColumn("__carried", lit(true)).unionByName(b))
       .localCheckpoint(true)
-    if (!applied(countsPath)) {
+    if (!countsDone) {
       import graft.operators.{Paths, Transitions}
       val fresh = Paths.countTriples(
         Paths.triples(Transitions.flags(uni)).filter(!col("__carried")))
-      val merged =
-        if (exists(countsPath))
-          spark.read.parquet(countsPath).unionByName(fresh)
-            .groupBy(col("step1"), col("step2"), col("step3"))
-            .agg(sum(col("n_paths")).cast("long").as("n_paths"))
-        else fresh
-      writeAndSwap(merged, countsPath)
+      stores.commit(countsPath, mergeBy(stores.read(countsPath), fresh,
+        Seq("step1", "step2", "step3"), sum(col("n_paths")).cast("long").as("n_paths")))
     }
-    if (!applied(carryPath)) {
+    if (!carryDone) {
       val wLast = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
         .orderBy(col("ts").desc, col("event_id").desc)
-      val newCarry = uni
+      stores.commit(carryPath, uni
         .withColumn("__rn", row_number().over(wLast))
         .filter(col("__rn") <= 2)
-        .select(cols: _*)
-      writeAndSwap(newCarry, carryPath)
+        .select(cols: _*))
     }
   }
 
@@ -1381,8 +1117,9 @@ object StreamPipeline {
     * atomic rename — the directory IS the idempotence marker), so
     * per-batch dim work is batch-grain, never O(accumulated store);
     * a rewrite-the-store merge would make a flip-heavy feed quadratic
-    * in stream length. The carry keeps the marker + atomic-swap
-    * protocol (it is a genuine one-row-per-user overwrite store). Dim
+    * in stream length. The carry commits through
+    * [[graft.batch.StoreCommit]] (it is a genuine one-row-per-user
+    * overwrite store). Dim
     * commits before carry (a replay between the two re-derives the
     * same carry from the old one). Scale: per-batch work is
     * batch-grain; both stores are user-grain or smaller per change —
@@ -1392,14 +1129,7 @@ object StreamPipeline {
   def scd2Maintain(eventsStream: DataFrame, dimPath: String, carryPath: String,
                    checkpoint: String,
                    trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scd2Batch(batch, dimPath, carryPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(scd2Batch(_, dimPath, carryPath, _))
 
   /** One [[scd2Maintain]] micro-batch. */
   private[graft] def scd2Batch(batch: DataFrame, dimPath: String,
@@ -1407,7 +1137,7 @@ object StreamPipeline {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, carryPath)
+    val stores = StoreCommit.open(spark, batchId, carryPath)
     // The append-only layout (per-batch `batch=<id>` dirs) is NOT
     // compatible with stores written by the pre-round-12 flat swap
     // protocol (part files directly in the root): partition discovery
@@ -1444,27 +1174,17 @@ object StreamPipeline {
         }
       }
     }
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    def applied(p: String): Boolean = exists(s"$p/_graft_batch_$batchId")
-    def writeAndSwap(df: DataFrame, p: String): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(p + ".tmp")
-      val marker = new org.apache.hadoop.fs.Path(s"$p.tmp/_graft_batch_$batchId")
-      marker.getFileSystem(hconf).create(marker, true).close()
-      graft.batch.AtomicSwap.swapInto(hconf, p + ".tmp", p)
-    }
     // dim commit = the per-batch partition directory itself (closed
     // intervals are immutable, so the store is append-only: no
     // read-union-rewrite of accumulated history per batch)
     val dimBatchDir = s"$dimPath/batch=$batchId"
-    if (exists(dimBatchDir) && applied(carryPath)) return
+    val carryDone = stores.applied(carryPath)
+    if (stores.exists(dimBatchDir) && carryDone) return
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val b0 = batch.select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .localCheckpoint(true)
-    val carry = if (exists(carryPath)) Some(spark.read.parquet(carryPath)) else None
+    val carry = stores.read(carryPath)
     carry.foreach { c =>
       val n = b0
         .join(c.select(col("user_id"), col("last_ts"), col("last_event_id")), Seq("user_id"))
@@ -1491,7 +1211,7 @@ object StreamPipeline {
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
         col("version"), col("valid_to"))
       .localCheckpoint(true)
-    if (!exists(dimBatchDir)) {
+    if (!stores.exists(dimBatchDir)) {
       val firstChange = changes.groupBy(col("user_id"))
         .agg(min(struct(col("ts"), col("event_id"))).as("fc"))
         .select(col("user_id"), col("fc.ts").as("__fc_ts"))
@@ -1514,13 +1234,13 @@ object StreamPipeline {
       // a close-nothing batch writes an empty stage dir (_SUCCESS, no
       // part files) — still a valid commit marker, and partition
       // discovery skips fileless batch dirs on read
-      withCarry.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      StoreCommit.writeOne(withCarry, stage.toString)
       fs.mkdirs(new org.apache.hadoop.fs.Path(dimPath))
       if (!fs.rename(stage, new org.apache.hadoop.fs.Path(dimBatchDir)))
         throw new java.io.IOException(
           s"scd2 dim commit rename failed: $stage -> $dimBatchDir")
     }
-    if (!applied(carryPath)) {
+    if (!carryDone) {
       val lastEvent = b0.groupBy(col("user_id"))
         .agg(max(struct(col("ts"), col("event_id"))).as("le"))
         .select(col("user_id"), col("le.ts").as("last_ts"),
@@ -1545,8 +1265,7 @@ object StreamPipeline {
           col("last_ts"), col("last_event_id"))
       val untouched = carry.map(
         _.join(b0.select(col("user_id")).distinct(), Seq("user_id"), "left_anti"))
-      val newCarry = untouched.fold(fromBatch)(fromBatch.unionByName(_))
-      writeAndSwap(newCarry, carryPath)
+      stores.commit(carryPath, untouched.fold(fromBatch)(fromBatch.unionByName(_)))
     }
   }
 
@@ -1556,9 +1275,8 @@ object StreamPipeline {
     * log2 value bands needs is the additive (event_type, day, band)
     * count grid — ≤ |types| × |days| × |bands| rows at any feed
     * size, merge-by-addition — so each micro-batch folds its own
-    * banded counts into the store (the cusumMaintain discipline:
-    * marker-idempotent, heal-before-read, atomic swap, no carry;
-    * addition commutes so ordered arrival is NOT required). Serving
+    * banded counts into the store ([[graft.batch.StoreCommit]], no
+    * carry; addition commutes so ordered arrival is NOT required). Serving
     * ([[psiServe]]) runs q229's ENTIRE closing — date-split from the
     * grid's own bounds, Laplace smoothing, fixed-point band terms —
     * through the SAME `psiFromGrid` the declared query calls, so
@@ -1566,40 +1284,18 @@ object StreamPipeline {
     * equals the batch grid. */
   def psiMaintain(eventsStream: DataFrame, gridPath: String, checkpoint: String,
                   trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        psiBatch(batch, gridPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(psiBatch(_, gridPath, _))
 
   /** One [[psiMaintain]] micro-batch. */
   private[graft] def psiBatch(batch: DataFrame, gridPath: String,
                               batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, gridPath)
-    val hp = new org.apache.hadoop.fs.Path(gridPath)
-    val exists = hp.getFileSystem(hconf).exists(hp)
-    if (exists && hp.getFileSystem(hconf)
-        .exists(new org.apache.hadoop.fs.Path(s"$gridPath/_graft_batch_$batchId"))) return
     val delta = batch
       .groupBy(col("event_type"), col("ts").cast("date").as("day"),
         graft.queries.AuditQueries.valueBand(col("value")).as("band"))
       .agg(count(lit(1)).as("x"))
-    val merged =
-      if (exists)
-        spark.read.parquet(gridPath).unionByName(delta)
-          .groupBy(col("event_type"), col("day"), col("band"))
-          .agg(sum(col("x")).cast("long").as("x"))
-      else delta
-    merged.coalesce(1).write.mode("overwrite").parquet(gridPath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$gridPath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, gridPath + ".tmp", gridPath)
+    StoreCommit.fold(batch.sparkSession, gridPath, batchId)(
+      mergeBy(_, delta, Seq("event_type", "day", "band"), sum(col("x")).cast("long").as("x")))
   }
 
   /** The q229 result served from the maintained band grid — the SAME
@@ -1629,43 +1325,21 @@ object StreamPipeline {
     * micro-batch folds its own register table (the SAME
     * AuditQueries.hllRegisters build as declared q232) into the
     * store by max; serving closes through the SAME hllEstimate, so
-    * serve ≡ batch q232 (estimate columns) is structural. Marker
-    * idempotence + heal + atomic swap as everywhere. */
+    * serve ≡ batch q232 (estimate columns) is structural. Commit:
+    * [[graft.batch.StoreCommit]]. */
   def hllMaintain(docsStream: DataFrame, regPath: String, checkpoint: String,
                   trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hllBatch(batch, regPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(docsStream, checkpoint, trigger)(hllBatch(_, regPath, _))
 
   /** One [[hllMaintain]] micro-batch. */
   private[graft] def hllBatch(batch: DataFrame, regPath: String,
                               batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, regPath)
-    val hp = new org.apache.hadoop.fs.Path(regPath)
-    val exists = hp.getFileSystem(hconf).exists(hp)
-    if (exists && hp.getFileSystem(hconf)
-        .exists(new org.apache.hadoop.fs.Path(s"$regPath/_graft_batch_$batchId"))) return
     val delta = graft.queries.AuditQueries.hllRegisters(
       batch.select(col("source"),
         explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w")))
-    val merged =
-      if (exists)
-        spark.read.parquet(regPath).unionByName(delta)
-          .groupBy(col("source"), col("bucket"))
-          .agg(max(col("m")).cast("int").as("m"))
-      else delta
-    merged.coalesce(1).write.mode("overwrite").parquet(regPath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$regPath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, regPath + ".tmp", regPath)
+    StoreCommit.fold(batch.sparkSession, regPath, batchId)(
+      mergeBy(_, delta, Seq("source", "bucket"), max(col("m")).cast("int").as("m")))
   }
 
   /** The q232 estimate columns served from the maintained registers —
@@ -1684,42 +1358,19 @@ object StreamPipeline {
     * — both lower medians, the integer 3·1.4826 cut — through the
     * SAME madFromGrid the declared query calls, so serve ≡ batch
     * q248 is structural once the maintained grid equals the batch
-    * grid. Marker idempotence + pre-read heal + atomic swap as in
-    * every maintainer. */
+    * grid. Commit: [[graft.batch.StoreCommit]]. */
   def madMaintain(eventsStream: DataFrame, gridPath: String, checkpoint: String,
                   trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        madBatch(batch, gridPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(madBatch(_, gridPath, _))
 
   /** One [[madMaintain]] micro-batch. */
   private[graft] def madBatch(batch: DataFrame, gridPath: String,
                               batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, gridPath)
-    val hp = new org.apache.hadoop.fs.Path(gridPath)
-    val exists = hp.getFileSystem(hconf).exists(hp)
-    if (exists && hp.getFileSystem(hconf)
-        .exists(new org.apache.hadoop.fs.Path(s"$gridPath/_graft_batch_$batchId"))) return
     val delta = graft.queries.InsightQueries.madGrid(
       batch.select(col("event_type"), col("value")))
-    val merged =
-      if (exists)
-        spark.read.parquet(gridPath).unionByName(delta)
-          .groupBy(col("event_type"), col("vc"))
-          .agg(sum(col("x")).cast("long").as("x"))
-      else delta
-    merged.coalesce(1).write.mode("overwrite").parquet(gridPath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$gridPath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, gridPath + ".tmp", gridPath)
+    StoreCommit.fold(batch.sparkSession, gridPath, batchId)(
+      mergeBy(_, delta, Seq("event_type", "vc"), sum(col("x")).cast("long").as("x")))
   }
 
   /** The q248 result served from the maintained value grid — the SAME
@@ -1751,38 +1402,16 @@ object StreamPipeline {
     * the SAME rulesFromCells the declared query calls. */
   def basketMaintain(linesStream: DataFrame, cellsPath: String, checkpoint: String,
                      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    linesStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        basketBatch(batch, cellsPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(linesStream, checkpoint, trigger)(basketBatch(_, cellsPath, _))
 
   /** One [[basketMaintain]] micro-batch. */
   private[graft] def basketBatch(batch: DataFrame, cellsPath: String,
                                  batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, cellsPath)
-    val hp = new org.apache.hadoop.fs.Path(cellsPath)
-    val exists = hp.getFileSystem(hconf).exists(hp)
-    if (exists && hp.getFileSystem(hconf)
-        .exists(new org.apache.hadoop.fs.Path(s"$cellsPath/_graft_batch_$batchId"))) return
     val delta = graft.queries.InsightQueries.basketCells(
       batch.select(col("l_orderkey"), col("l_partkey")))
-    val merged =
-      if (exists)
-        spark.read.parquet(cellsPath).unionByName(delta)
-          .groupBy(col("ka"), col("kb"))
-          .agg(sum(col("cnt")).cast("long").as("cnt"))
-      else delta
-    merged.coalesce(1).write.mode("overwrite").parquet(cellsPath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$cellsPath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, cellsPath + ".tmp", cellsPath)
+    StoreCommit.fold(batch.sparkSession, cellsPath, batchId)(
+      mergeBy(_, delta, Seq("ka", "kb"), sum(col("cnt")).cast("long").as("cnt")))
   }
 
   /** The q246 rules served from the maintained cell grid — the SAME
@@ -1863,35 +1492,23 @@ object StreamPipeline {
     * Event-time regressions against the carry are counted in
     * [[lateBotRows]] (the lateTransitionRows contract: ordered
     * arrival assumed, violations observable, never silent).
-    * Marker idempotence + pre-read heal + atomic swap as in every
-    * maintainer. State is ONE bounded row per user. */
+    * Commit: [[graft.batch.StoreCommit]]. State is ONE bounded row
+    * per user. */
   val lateBotRows = new java.util.concurrent.atomic.AtomicLong(0L)
 
   def botMaintain(eventsStream: DataFrame, storePath: String, checkpoint: String,
                   trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        botBatch(batch, storePath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(botBatch(_, storePath, _))
 
   /** One [[botMaintain]] micro-batch. */
   private[graft] def botBatch(batch: DataFrame, storePath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, storePath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    if (exists(s"$storePath/_graft_batch_$batchId")) return // replay: no-op
-    val store: Option[DataFrame] =
-      if (exists(storePath)) Some(spark.read.parquet(storePath).localCheckpoint(true))
-      else None
+    StoreCommit.fold(batch.sparkSession, storePath, batchId)(
+      live => botMerge(live.map(_.localCheckpoint(true)), batch))
+  }
+
+  /** [[botBatch]]'s fold of one batch into the (optional) live store. */
+  private def botMerge(store: Option[DataFrame], batch: DataFrame): DataFrame = {
     val evCols = Seq("user_id", "ts", "event_id", "event_type").map(col)
     val b = batch.select(evCols: _*).localCheckpoint(true)
     val uni = store match {
@@ -1966,11 +1583,7 @@ object StreamPipeline {
         col("last_ts"), col("last_eid"), col("last_type"))
     val untouched = store.map(
         _.join(b.select(col("user_id")).distinct(), Seq("user_id"), "left_anti"))
-    val newStore = untouched.map(_.unionByName(combined)).getOrElse(combined)
-    newStore.coalesce(1).write.mode("overwrite").parquet(storePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$storePath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, storePath + ".tmp", storePath)
+    untouched.map(_.unionByName(combined)).getOrElse(combined)
   }
 
   /** Serve q205's bot profile from the maintained store — the SAME
@@ -2134,39 +1747,20 @@ object StreamPipeline {
     * arrival order (RfmStreamSpec pins a shuffled split). Serve via
     * [[graft.operators.Rfm.segment]] over the store — recency is
     * relative to the live feed head by construction. Idempotence /
-    * crash safety: the transitionBatch marker + heal contract. The
-    * store is user-grain. */
+    * crash safety: [[graft.batch.StoreCommit]]. The store is
+    * user-grain. */
   def rfmMaintain(eventsStream: DataFrame, storePath: String, checkpoint: String,
                   trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rfmBatch(batch, storePath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(rfmBatch(_, storePath, _))
 
   /** One [[rfmMaintain]] micro-batch. */
   private[graft] def rfmBatch(batch: DataFrame, storePath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, storePath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
+    StoreCommit.fold(batch.sparkSession, storePath, batchId) { store =>
+      import graft.operators.Rfm
+      val bState = Rfm.userState(batch)
+      store.fold(bState)(Rfm.merge(_, bState))
     }
-    if (exists(s"$storePath/_graft_batch_$batchId")) return
-    val bState = graft.operators.Rfm.userState(batch)
-    val merged =
-      if (exists(storePath))
-        graft.operators.Rfm.merge(spark.read.parquet(storePath), bState)
-      else bState
-    merged.coalesce(1).write.mode("overwrite").parquet(storePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$storePath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, storePath + ".tmp", storePath)
   }
 
   /** STREAMING SESSION-SUMMARY MAINTENANCE: q182's per-user summary
@@ -2180,35 +1774,17 @@ object StreamPipeline {
     * ([[graft.operators.Sessions.summary]]) counts the open session
     * exactly as a batch run counts the feed's last session, so served
     * ≡ declared q182 bitwise under any ordered split
-    * (SessionsStreamSpec). Idempotence/crash safety: marker + heal. */
+    * (SessionsStreamSpec). Idempotence/crash safety:
+    * [[graft.batch.StoreCommit]]. */
   def sessionsMaintain(eventsStream: DataFrame, storePath: String, checkpoint: String,
                        trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sessionsBatch(batch, storePath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(sessionsBatch(_, storePath, _))
 
   /** One [[sessionsMaintain]] micro-batch. */
   private[graft] def sessionsBatch(batch: DataFrame, storePath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, storePath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    if (exists(s"$storePath/_graft_batch_$batchId")) return
-    val store = if (exists(storePath)) Some(spark.read.parquet(storePath)) else None
-    val merged = graft.operators.Sessions.fold(store, batch)
-    merged.coalesce(1).write.mode("overwrite").parquet(storePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$storePath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, storePath + ".tmp", storePath)
+    StoreCommit.fold(batch.sparkSession, storePath, batchId)(
+      graft.operators.Sessions.fold(_, batch))
   }
 
   /** STREAMING DAILY-VOLUME CUSUM MAINTENANCE (leg 20): q224's
@@ -2216,8 +1792,7 @@ object StreamPipeline {
     * daily event volumes needs is the (event_type, day) count grid —
     * merge-by-addition, bounded by |types| × |days| at any feed size
     * — so each micro-batch folds its own counts into the store
-    * (marker-idempotent, heal-before-read, atomic swap: the lift
-    * maintainer's exactly-once discipline without a carry). Serving
+    * ([[graft.batch.StoreCommit]], no carry). Serving
     * ([[cusumServe]]) runs q224's ENTIRE fold — deviations, both
     * one-sided integer CUSUMs, the 5σ alarm — through the SAME
     * `cusumFromDaily` the declared query calls, so serve ≡ batch
@@ -2226,40 +1801,17 @@ object StreamPipeline {
   def cusumMaintain(eventsStream: DataFrame, countsPath: String,
                     checkpoint: String,
                     trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cusumBatch(batch, countsPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(cusumBatch(_, countsPath, _))
 
   /** One [[cusumMaintain]] micro-batch. */
   private[graft] def cusumBatch(batch: DataFrame, countsPath: String,
                                 batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, countsPath)
-    val hp = new org.apache.hadoop.fs.Path(countsPath)
-    val exists = hp.getFileSystem(hconf).exists(hp)
-    val applied = exists && hp.getFileSystem(hconf)
-      .exists(new org.apache.hadoop.fs.Path(s"$countsPath/_graft_batch_$batchId"))
-    if (applied) return
     val delta = batch
       .groupBy(col("event_type"), col("ts").cast("date").as("day"))
       .agg(count(lit(1)).as("x"))
-    val merged =
-      if (exists)
-        spark.read.parquet(countsPath).unionByName(delta)
-          .groupBy(col("event_type"), col("day"))
-          .agg(sum(col("x")).cast("long").as("x"))
-      else delta
-    merged.coalesce(1).write.mode("overwrite").parquet(countsPath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(s"$countsPath.tmp/_graft_batch_$batchId")
-    marker.getFileSystem(hconf).create(marker, true).close()
-    graft.batch.AtomicSwap.swapInto(hconf, countsPath + ".tmp", countsPath)
+    StoreCommit.fold(batch.sparkSession, countsPath, batchId)(
+      mergeBy(_, delta, Seq("event_type", "day"), sum(col("x")).cast("long").as("x")))
   }
 
   /** The q224 result served from the maintained daily-count store —
@@ -2277,51 +1829,25 @@ object StreamPipeline {
     * ([[liftServe]]) adds each open session's provisional
     * contribution — exactly the batch run's feed-end accounting — and
     * closes with q190's formula: served ≡ declared q190 bitwise
-    * (LiftStreamSpec). Idempotence/crash safety: marker + heal;
-    * counts commit before carry. */
+    * (LiftStreamSpec). Idempotence/crash safety:
+    * [[graft.batch.StoreCommit]] (counts commit before carry). */
   def liftMaintain(eventsStream: DataFrame, countsPath: String, carryPath: String,
                    checkpoint: String,
                    trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        liftBatch(batch, countsPath, carryPath, batchId)
-      }
-      .start()
+    foreachBatchQuery(eventsStream, checkpoint, trigger)(liftBatch(_, countsPath, carryPath, _))
 
   /** One [[liftMaintain]] micro-batch. */
   private[graft] def liftBatch(batch: DataFrame, countsPath: String,
                                carryPath: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    graft.batch.AtomicSwap.heal(hconf, countsPath)
-    graft.batch.AtomicSwap.heal(hconf, carryPath)
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    def applied(p: String): Boolean = exists(s"$p/_graft_batch_$batchId")
-    def writeAndSwap(df: DataFrame, p: String): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(p + ".tmp")
-      val marker = new org.apache.hadoop.fs.Path(s"$p.tmp/_graft_batch_$batchId")
-      marker.getFileSystem(hconf).create(marker, true).close()
-      graft.batch.AtomicSwap.swapInto(hconf, p + ".tmp", p)
-    }
-    val carry = if (exists(carryPath)) Some(spark.read.parquet(carryPath)) else None
-    val (delta, nextCarry) = graft.operators.SessionLift.fold(carry, batch)
-    if (!applied(countsPath)) {
-      val merged =
-        if (exists(countsPath))
-          spark.read.parquet(countsPath).unionByName(delta)
-            .groupBy(col("kind"), col("k1"), col("k2"))
-            .agg(sum(col("n")).cast("long").as("n"))
-        else delta
-      writeAndSwap(merged, countsPath)
-    }
-    if (!applied(carryPath)) writeAndSwap(nextCarry, carryPath)
+    val stores = StoreCommit.open(batch.sparkSession, batchId, countsPath, carryPath)
+    val (countsDone, carryDone) = (stores.applied(countsPath), stores.applied(carryPath))
+    if (countsDone && carryDone) return
+    val (delta, nextCarry) = graft.operators.SessionLift.fold(stores.read(carryPath), batch)
+    if (!countsDone)
+      stores.commit(countsPath, mergeBy(stores.read(countsPath), delta, Seq("kind", "k1", "k2"),
+        sum(col("n")).cast("long").as("n")))
+    if (!carryDone) stores.commit(carryPath, nextCarry)
   }
 
   /** The q190 result served from the maintained stores. */
@@ -2348,18 +1874,12 @@ object StreamPipeline {
   def similarityServe(queryStream: DataFrame, corpus: DataFrame, outPath: String,
                       checkpoint: String, k: Int = 5,
                       trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.functions.Similarity.cosineTopK(batch, corpus, "id", "embedding", k)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
+    foreachBatchQuery(queryStream, checkpoint, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        graft.functions.Similarity.cosineTopK(batch, corpus, "id", "embedding", k)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outPath)
+    }
 
   /** INCREMENTAL PQ INDEX MAINTENANCE — the missing half of
     * [[pqServe]]'s static index: production serving appends vectors
@@ -2373,25 +1893,21 @@ object StreamPipeline {
     * [[graft.functions.ProductQuant.quantizationError]] on a fresh
     * sample vs the baseline recorded at train time
     * ([[graft.functions.ProductQuant.shouldRetrain]]) — drift decides
-    * retraining, not the append path. */
+    * retraining, not the append path. The append heals first:
+    * [[removeFromCodeIndex]] swaps this store. */
   def pqIndexMaintain(vectorStream: DataFrame, book: DataFrame, indexPath: String,
                       checkpoint: String, idCol: String, vecCol: String,
                       nSub: Int, dim: Int,
                       trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    vectorStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.ProductQuant.encode(
-              graft.functions.ProductQuant.subspaces(batch, idCol, vecCol, nSub, dim), book)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(indexPath)
-        }
-        ()
-      }
-      .start()
+    foreachBatchQuery(vectorStream, checkpoint, trigger) { (batch, batchId) =>
+    if (!batch.isEmpty) {
+      StoreCommit.heal(batch.sparkSession, indexPath)
+      graft.functions.ProductQuant.encode(
+          graft.functions.ProductQuant.subspaces(batch, idCol, vecCol, nSub, dim), book)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(indexPath)
+    }
+    }
 
   /** Read the maintained code index exactly-once: replayed
     * micro-batches drop by keeping the min batch_id per (id, m). */
@@ -2408,13 +1924,13 @@ object StreamPipeline {
     * can shortlist the vectors again — a vector store's equivalent of
     * purging a search index after a source-table delete. */
   def removeFromCodeIndex(spark: SparkSession, indexPath: String, ids: DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val del = ids.select(col(ids.columns.head).cast("long").as("id"))
-    val orig = spark.read.parquet(indexPath)
-    orig.join(del, Seq("id"), "left_anti")
-      .select(orig.columns.map(col).toSeq: _*)
-      .write.mode("overwrite").parquet(indexPath + ".rm")
-    graft.batch.AtomicSwap.swapInto(conf, indexPath + ".rm", indexPath)
+    StoreCommit.replace(spark, indexPath) { staging =>
+      val orig = spark.read.parquet(indexPath)
+      orig.join(del, Seq("id"), "left_anti")
+        .select(orig.columns.map(col).toSeq: _*)
+        .write.mode("overwrite").parquet(staging)
+    }
   }
 
   /** ONLINE PQ SERVING: the compressed-index complement of
@@ -2432,22 +1948,16 @@ object StreamPipeline {
               outPath: String, checkpoint: String, idCol: String, vecCol: String,
               nSub: Int, dim: Int, shortlist: Int, k: Int,
               trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val short = graft.functions.Similarity.topK(
-            graft.functions.ProductQuant.adcScoreCodes(batch, codes, book, idCol, vecCol, nSub, dim),
-            shortlist, col("approx_cos")).select(col("query_id"), col("neighbor_id"))
-          graft.functions.ProductQuant.exactRerank(short, batch, corpus, idCol, vecCol, k)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-        ()
+    foreachBatchQuery(queryStream, checkpoint, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val short = graft.functions.Similarity.topK(
+          graft.functions.ProductQuant.adcScoreCodes(batch, codes, book, idCol, vecCol, nSub, dim),
+          shortlist, col("approx_cos")).select(col("query_id"), col("neighbor_id"))
+        graft.functions.ProductQuant.exactRerank(short, batch, corpus, idCol, vecCol, k)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outPath)
       }
-      .start()
+    }
 
   def enrichWithQuotes(ticks: DataFrame, quotes: DataFrame,
                        joinWindow: String = "10 minutes",

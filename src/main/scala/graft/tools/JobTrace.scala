@@ -21,7 +21,9 @@ object JobTrace {
         val cs = Option(js.properties).map(_.getProperty("callSite.short", "?")).getOrElse("?")
         val desc = Option(js.properties).map(_.getProperty("spark.job.description", "")).getOrElse("")
         jobInfo.put(js.jobId, s"callsite=$cs desc=${desc.take(60)}")
-        js.stageIds.foreach(s => stageToJob.put(s, js.jobId))
+        // a stage reused by a later job (skipped stage) stays attributed
+        // to the job that first ran it
+        js.stageIds.foreach(s => stageToJob.putIfAbsent(s, js.jobId))
         println(s"[job] id=${js.jobId} stages=${js.stageIds.mkString(",")} $cs ${desc.take(60)}")
       }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {

@@ -28,7 +28,6 @@ object SessionBisect {
     if (feats("graceful")) b = b.config("spark.streaming.stopGracefullyOnShutdown", "true")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val twoTask = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val m = sc.stageInfo.taskMetrics
@@ -46,6 +45,5 @@ object SessionBisect {
       System.gc()
     }
     spark.stop()
-    if (twoTask.get() > 0) () // keep compiler quiet
   }
 }

@@ -1,0 +1,95 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.batch.BatchJobs
+import graft.streaming.{Ingest, StreamPipeline}
+
+/** The two append-only stores that a rewrite also swaps: the tick
+  * bucket store (appended by StreamPipeline.run, swapped by
+  * BatchJobs.compactBuckets) and the PQ code index (appended by
+  * pqIndexMaintain, swapped by removeFromCodeIndex). A crash between a
+  * swap's live→.old and tmp→live renames leaves no live directory. The
+  * next append must heal first: appending into a fresh live directory
+  * hides the history in `.old`, and the next swap deletes it as stale.
+  */
+class HealBeforeAppendSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** The on-disk state of a swap torn after its first rename. */
+  private def tearSwap(live: String): Unit =
+    Files.move(Paths.get(live), Paths.get(live + ".old"))
+
+  test("bucket store: appends after a torn compaction swap keep every earlier bucket") {
+    val dir = Files.createTempDirectory("graft_heal_buckets").toString
+    val store = s"$dir/buckets"
+    val base = 1704067200L // 2024-01-01T00:00:00Z
+    val iso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+      .withZone(java.time.ZoneOffset.UTC)
+    def tick(off: Long): RawTick = RawTick("A", 10.0, 0, "0%", "1", 10, 10,
+      iso.format(java.time.Instant.ofEpochSecond(base + off)))
+    val stream = MemoryStream[RawTick](spark)
+    val q = StreamPipeline.run(Ingest.clean(stream.toDF()), store, s"$dir/ckpt",
+      trigger = Trigger.ProcessingTime(0))
+    val before = try {
+      stream.addData((0 until 10).map(i => tick(i * 30L)))
+      q.processAllAvailable()
+      // flush ticks push the watermark past bucket [0, 300)
+      stream.addData(Seq(tick(7200)))
+      q.processAllAvailable()
+      stream.addData(Seq(tick(7500)))
+      q.processAllAvailable()
+      val held = StreamPipeline.readBuckets(spark, store).collect().toSet
+      assert(held.nonEmpty, "bucket [0, 300) must be in the store before the crash")
+      tearSwap(store)
+      stream.addData(Seq(tick(14400)))
+      q.processAllAvailable()
+      stream.addData(Seq(tick(14700)))
+      q.processAllAvailable()
+      held
+    } finally q.stop()
+    val after = StreamPipeline.readBuckets(spark, store).collect().toSet
+    assert(before.subsetOf(after), s"appends must heal first: lost ${before -- after}")
+    assert(after.size > before.size, "the post-crash buckets must land too")
+    BatchJobs.compactBuckets(spark, store)
+    assert(StreamPipeline.readBuckets(spark, store).collect().toSet == after,
+      "the next swap must not drop history as a stale .old")
+    assert(!Files.exists(Paths.get(store + ".old")))
+  }
+
+  test("PQ code index: append and erasure after a torn swap keep every earlier code") {
+    import graft.functions.ProductQuant
+    val dir = Files.createTempDirectory("graft_heal_pq").toString
+    val index = s"$dir/index"
+    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val (codes, book) = ProductQuant.buildIndex(e, "vec_id", "embedding", 16, 64, 4, 1)
+    codes.withColumn("batch_id", lit(-1L)).write.mode("overwrite").parquet(index)
+    val before = StreamPipeline.readCodeIndex(spark, index).collect().toSet
+
+    tearSwap(index) // as if removeFromCodeIndex crashed mid-swap
+    val clone = e.filter(col("vec_id") === 7L)
+      .select(col("embedding").cast("array<float>")).head().getSeq[Float](0)
+    val stream = MemoryStream[(Long, Seq[Float])](spark)
+    val q = StreamPipeline.pqIndexMaintain(
+      stream.toDF().toDF("vec_id", "embedding"), book, index, s"$dir/ckpt",
+      "vec_id", "embedding", nSub = 16, dim = 64, trigger = Trigger.ProcessingTime(0))
+    try {
+      stream.addData((9001L, clone))
+      q.processAllAvailable()
+    } finally q.stop()
+    val after = StreamPipeline.readCodeIndex(spark, index).collect().toSet
+    assert(before.subsetOf(after), s"the append must heal first: lost ${(before -- after).size} codes")
+    assert(after.size == before.size + 16, "the appended vector's 16 codes land")
+
+    tearSwap(index) // a second torn swap, now ahead of an erasure
+    StreamPipeline.removeFromCodeIndex(spark, index, Seq(7L).toDF("vec_id"))
+    val erased = StreamPipeline.readCodeIndex(spark, index).collect().toSet
+    assert(erased == after.filterNot(_.getAs[Long]("id") == 7L),
+      "erasure must heal, then remove exactly the erased id's codes")
+    assert(!Files.exists(Paths.get(index + ".old")))
+  }
+}

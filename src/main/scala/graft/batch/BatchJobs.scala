@@ -52,26 +52,23 @@ object BatchJobs {
       .mode("overwrite")
       .csv(s"$basePath/date=$date")
 
-  /** S8: append parquet partitioned by symbol. */
-  def writeProcessed(df: DataFrame, path: String): Unit =
-    df.write.mode("append").partitionBy("symbol").parquet(path)
-
   /** Bucket-store compaction — the operational answer to streaming's
-    * small-files problem: foreachBatch appends one file per partition
-    * per micro-batch, which at 100 TB is millions of files whose
-    * listing alone dominates reads. Compaction folds replayed
-    * micro-batches (StreamPipeline.readBuckets dedup), rewrites the
-    * store coalesced to `targetFileRows`-sized files per symbol
-    * partition, and swaps atomically (write-temp + rename, same as
-    * WarehouseLoader.writeSnapshot) so concurrent readers see either
-    * the old or the new layout. Run it on a cadence; the streaming
-    * writer keeps appending to the swapped-in store because the path
-    * is unchanged. A torn earlier swap is healed before the store is
-    * read (StoreCommit rule 1). Returns (filesBefore, filesAfter). */
+    * small-files problem: foreachBatch appends files with every
+    * micro-batch, which at 100 TB is millions of files whose listing
+    * alone dominates reads. Compaction folds replayed micro-batches
+    * (StreamPipeline.readBuckets dedup), rewrites the store in the
+    * streaming writer's UTC-day layout as `targetFileRows`-sized files
+    * sorted by (symbol, bucket_start) within each day
+    * (StreamPipeline.writeBucketLayout), and swaps atomically
+    * (StoreCommit.replace: heal, write-temp, rename) so concurrent
+    * readers see either the old or the new layout. Run it on a
+    * cadence; the streaming writer keeps appending to the swapped-in
+    * store because the path is unchanged. It also migrates a store in
+    * the old symbol-partitioned layout: run it once before restarting
+    * a stream on such a store. Returns (filesBefore, filesAfter). */
   def compactBuckets(spark: SparkSession, bucketPath: String,
                      targetFileRows: Long = 4000000L): (Long, Long) = {
     import org.apache.hadoop.fs.Path
-    StoreCommit.heal(spark, bucketPath)
     def countFiles(p: String): Long = {
       val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(new Path(p), true)
@@ -79,14 +76,14 @@ object BatchJobs {
       while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
       n
     }
+    StoreCommit.heal(spark, bucketPath)
     val before = countFiles(bucketPath)
-    val deduped = graft.streaming.StreamPipeline.readBuckets(spark, bucketPath)
-      .withColumn("batch_id", lit(-1L)) // compacted rows predate any replay
-    val rows = deduped.count()
-    val nFiles = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
-    val tmp = bucketPath + ".compact"
-    deduped.repartition(nFiles).write.mode("overwrite").partitionBy("symbol").parquet(tmp)
-    AtomicSwap.swapInto(spark.sparkContext.hadoopConfiguration, tmp, bucketPath)
+    StoreCommit.replace(spark, bucketPath) { staging =>
+      val deduped = graft.streaming.StreamPipeline.readBuckets(spark, bucketPath)
+        .withColumn("batch_id", lit(-1L)) // compacted rows predate any replay
+      val nFiles = math.max(1, math.ceil(deduped.count().toDouble / targetFileRows).toInt)
+      graft.streaming.StreamPipeline.writeBucketLayout(deduped, staging, nFiles)
+    }
     (before, countFiles(bucketPath))
   }
 }

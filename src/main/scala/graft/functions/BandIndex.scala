@@ -51,8 +51,10 @@ object BandIndex {
   /** True when `build`/`append` has written this index. Resolved via
     * the session's Hadoop filesystem (not java.io.File) so the check
     * agrees with where build/append/compact actually write — local,
-    * HDFS, or s3a — matching [[graft.batch.AtomicSwap]]. */
+    * HDFS, or s3a — matching [[graft.batch.AtomicSwap]]. Heals first,
+    * so a torn swap reads as the index it was, not as no index. */
   def exists(spark: SparkSession, path: String): Boolean = {
+    healTables(spark, path)
     val p = new org.apache.hadoop.fs.Path(bandsPath(path))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
@@ -79,6 +81,7 @@ object BandIndex {
   private def writeBatch(df: DataFrame, idCol: String, tokensCol: org.apache.spark.sql.Column,
                          path: String, numHashes: Int, bands: Int, mode: String): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
+    healTables(df.sparkSession, path)
     // one pass over the batch feeds both tables; the batch is small
     // (that is the point of an incremental index), so persist is cheap
     val p = prep(df, idCol, tokensCol)
@@ -87,6 +90,13 @@ object BandIndex {
     band(p, numHashes, bands).write.mode(mode).parquet(bandsPath(path))
     p.unpersist(blocking = false)
   }
+
+  /** Heal both tables before a write: [[compact]] and [[removeIds]]
+    * swap them, and an append into a live dir that a torn swap left
+    * missing would hide the history in `.old` until the next swap
+    * deletes it (graft.batch.StoreCommit rule 1). */
+  private def healTables(spark: SparkSession, path: String): Unit =
+    graft.batch.StoreCommit.heal(spark, toksPath(path), bandsPath(path))
 
   /** Create (overwrite) the index from a corpus. */
   def build(df: DataFrame, idCol: String, tokensCol: org.apache.spark.sql.Column, path: String,
@@ -106,6 +116,7 @@ object BandIndex {
   def writePrepped(spark: SparkSession, survivors: Array[MicroDedup.Survivor],
                    path: String, mode: String): Unit = {
     import spark.implicits._
+    healTables(spark, path)
     val toksRows = survivors.toSeq.map(s => (s.id, s.toks.toSeq, s.toks.length))
       .toDF("id", "toks", "sz") // prep()'s column order — appended files match
     toksRows.coalesce(1).write.mode(mode).parquet(toksPath(path))
@@ -152,15 +163,11 @@ object BandIndex {
 
   /** Rewrite the index with replay-duplicate rows collapsed (an
     * at-least-once writer appends the same id twice; see class doc). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val t = spark.read.parquet(toksPath(path)).dropDuplicates("id")
-    t.write.mode("overwrite").parquet(toksPath(path) + ".compact")
-    graft.batch.AtomicSwap.swapInto(conf, toksPath(path) + ".compact", toksPath(path))
-    val b = spark.read.parquet(bandsPath(path)).dropDuplicates("id", "band")
-    b.write.mode("overwrite").parquet(bandsPath(path) + ".compact")
-    graft.batch.AtomicSwap.swapInto(conf, bandsPath(path) + ".compact", bandsPath(path))
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    for ((sub, key) <- Seq(toksPath(path) -> Seq("id"), bandsPath(path) -> Seq("id", "band")))
+      graft.batch.StoreCommit.replace(spark, sub) { staging =>
+        spark.read.parquet(sub).dropDuplicates(key).write.mode("overwrite").parquet(staging)
+      }
 
   /** GDPR-shaped delete: drop `ids` from both index tables (rewrite +
     * atomic swap, the compact mechanics). After removal the index
@@ -172,18 +179,17 @@ object BandIndex {
     * to the derived index). Takes the delete set as a DataFrame so a
     * large erasure batch anti-joins instead of riding the driver. */
   def removeIds(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val del = ids.select(col(ids.columns.head).cast("long").as("id"))
-    for (sub <- Seq(toksPath(path), bandsPath(path))) {
-      val orig = spark.read.parquet(sub)
-      // the USING anti-join moves `id` first — re-select the original
-      // column order so the rewritten table is byte-compatible with a
-      // fresh build
-      orig.join(del, Seq("id"), "left_anti")
-        .select(orig.columns.map(col).toSeq: _*)
-        .write.mode("overwrite").parquet(sub + ".rm")
-      graft.batch.AtomicSwap.swapInto(conf, sub + ".rm", sub)
-    }
+    for (sub <- Seq(toksPath(path), bandsPath(path)))
+      graft.batch.StoreCommit.replace(spark, sub) { staging =>
+        val orig = spark.read.parquet(sub)
+        // the USING anti-join moves `id` first — re-select the original
+        // column order so the rewritten table is byte-compatible with a
+        // fresh build
+        orig.join(del, Seq("id"), "left_anti")
+          .select(orig.columns.map(col).toSeq: _*)
+          .write.mode("overwrite").parquet(staging)
+      }
   }
 
   /** Seq convenience for small erasure sets. */

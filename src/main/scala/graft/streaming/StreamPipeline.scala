@@ -160,20 +160,38 @@ object StreamPipeline {
       cleaned.filter(col("timestamp") < lit(watermarkTs)))
 
   /** Run the streaming leg: cleaned ticks -> bucket partials ->
-    * append-only parquet bucket store (partitioned by symbol, S8),
-    * batch id stamped for replay dedup. Ingest metrics travel via
-    * `observe` (replacing the reference's per-batch collect()+count()
-    * debug sink, spark_stream_processor.py:75-90 — zero extra jobs).
-    * The append heals first: BatchJobs.compactBuckets swaps this store. */
+    * append-only parquet bucket store, batch id stamped for replay
+    * dedup ([[appendBuckets]]). Ingest metrics travel via `observe`
+    * (replacing the reference's per-batch collect()+count() debug
+    * sink, spark_stream_processor.py:75-90 — zero extra jobs). */
   def run(cleaned: DataFrame, bucketPath: String, checkpoint: String,
           trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
     foreachBatchQuery(bucketPartials(
       cleaned.observe("graft_ingest", count(lit(1)).as("rows"), sum(col("volume")).as("volume"))
     ), checkpoint, trigger) { (batch, batchId) =>
-      StoreCommit.heal(batch.sparkSession, bucketPath)
-      batch.withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("symbol").parquet(bucketPath)
+      appendBuckets(batch.withColumn("batch_id", lit(batchId)), bucketPath)
     }
+
+  /** The bucket store's partition column: the UTC day of
+    * `bucket_start`, from the epoch seconds (so the session time zone
+    * never moves a bucket to another day). */
+  private val DayPartition = "bucket_day"
+
+  private def utcDay(epochSec: Column): Column =
+    date_from_unix_date(floor(epochSec / 86400L).cast("int"))
+
+  /** Append batch-stamped buckets to the store, partitioned by the UTC
+    * day of `bucket_start` rather than by symbol (the reference's S8
+    * layout, spark_stream_processor.py:95-98): a micro-batch writes one
+    * file per writer task per day it touches instead of one per
+    * symbol, and a serve lists one or two directories. The
+    * dynamic-partition writer writes no file for an empty batch. The
+    * append heals first: BatchJobs.compactBuckets swaps this store. */
+  private[graft] def appendBuckets(stamped: DataFrame, bucketPath: String): Unit = {
+    StoreCommit.heal(stamped.sparkSession, bucketPath)
+    stamped.withColumn(DayPartition, utcDay(col("bucket_start")))
+      .write.mode("append").partitionBy(DayPartition).parquet(bucketPath)
+  }
 
   /** Start `stream` as the append-mode foreachBatch query every
     * streaming leg here runs. */
@@ -262,12 +280,25 @@ object StreamPipeline {
     }
 
   /** Read the bucket store exactly-once: replayed micro-batches are
-    * dropped by keeping the min batch_id per (symbol, bucket_start). */
+    * dropped by keeping the min batch_id per (symbol, bucket_start).
+    * The day partition column is dropped, so the columns are those of
+    * [[bucketAgg]]. A store still in the old symbol-partitioned layout
+    * reads too; BatchJobs.compactBuckets migrates it. */
   def readBuckets(spark: SparkSession, bucketPath: String): DataFrame =
     graft.operators.Dedup.keepFirst(
-      spark.read.parquet(bucketPath),
+      spark.read.parquet(bucketPath).drop(DayPartition),
       Seq("symbol", "bucket_start"), Seq(col("batch_id")))
       .drop("batch_id")
+
+  /** Rewrite `buckets` as the store's day layout at `path`, range
+    * partitioned into `nFiles` tasks and sorted by (symbol,
+    * bucket_start) within each day, so parquet row-group min/max
+    * still prune a symbol filter. */
+  private[graft] def writeBucketLayout(buckets: DataFrame, path: String, nFiles: Int): Unit =
+    buckets.withColumn(DayPartition, utcDay(col("bucket_start")))
+      .repartitionByRange(nFiles, col(DayPartition), col("symbol"), col("bucket_start"))
+      .sortWithinPartitions(DayPartition, "symbol", "bucket_start")
+      .write.mode("overwrite").partitionBy(DayPartition).parquet(path)
 
   /** Streaming exactly-once event dedup with BOUNDED state:
     * `dropDuplicatesWithinWatermark` keeps a key's dedup state only
@@ -580,32 +611,39 @@ object StreamPipeline {
     * standing-store size; the panel itself stays (instruments × days)
     * rows. At-least-once replay is absorbed twice over: the store
     * dedups on (event_id, batch_id) at read time (readBuckets
-    * contract) and the PK merge is naturally idempotent. ONE code
+    * contract) and the PK merge is naturally idempotent; the panel
+    * commits through [[graft.batch.StoreCommit]], so a crash mid-write
+    * never leaves a partial panel. ONE code
     * path with batch q172 ([[graft.operators.DailyPanel.compute]]) —
     * StreamingSpec pins stream-maintained ≡ batch-computed. */
   def panelMaintain(ticksStream: DataFrame, tickStore: String, panelPath: String,
                     checkpoint: String,
                     trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    foreachBatchQuery(ticksStream, checkpoint, trigger) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      val stamped = batch
-        .withColumn("day", to_date(col("ts")))
-        .withColumn("batch_id", lit(batchId))
-      stamped.write.mode("append").partitionBy("day").parquet(tickStore)
-      val days = stamped.select(col("day")).distinct()
-        .collect().map(_.getDate(0)) // bounded: a micro-batch spans few days
-      val affected = spark.read.parquet(tickStore)
-        .filter(col("day").isin(days.toIndexedSeq: _*)) // partition-pruned
-        .dropDuplicates("event_id", "batch_id")
-        .drop("day", "batch_id")
-      val fresh = graft.operators.DailyPanel.compute(affected)
-      val merged = (if (new java.io.File(panelPath).exists())
-          graft.operators.MergeUpsert.upsert(
-            spark.read.parquet(panelPath), fresh, Seq("event_type", "day"))
-        else fresh)
-        .localCheckpoint(true) // materialize BEFORE overwriting the path being read
-      merged.write.mode("overwrite").parquet(panelPath)
-    }
+    foreachBatchQuery(ticksStream, checkpoint, trigger)(panelBatch(_, tickStore, panelPath, _))
+
+  /** One [[panelMaintain]] micro-batch. A replay that finds the panel
+    * committed skips the batch; one that finds only the tick append
+    * appends again, and the store's read drops the copy. */
+  private[graft] def panelBatch(batch: DataFrame, tickStore: String, panelPath: String,
+                                batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    val stores = StoreCommit.open(spark, batchId, panelPath)
+    if (stores.applied(panelPath)) return
+    val stamped = batch
+      .withColumn("day", to_date(col("ts")))
+      .withColumn("batch_id", lit(batchId))
+    stamped.write.mode("append").partitionBy("day").parquet(tickStore)
+    val days = stamped.select(col("day")).distinct()
+      .collect().map(_.getDate(0)) // bounded: a micro-batch spans few days
+    if (days.isEmpty) return
+    val affected = spark.read.parquet(tickStore)
+      .filter(col("day").isin(days.toIndexedSeq: _*)) // partition-pruned
+      .dropDuplicates("event_id", "batch_id")
+      .drop("day", "batch_id")
+    val fresh = graft.operators.DailyPanel.compute(affected)
+    stores.commit(panelPath, stores.read(panelPath).fold(fresh)(
+      graft.operators.MergeUpsert.upsert(_, fresh, Seq("event_type", "day"))))
+  }
 
   /** STREAMING PER-SOURCE ADAPTIVE QUALITY GATE: the live form of the
     * q161 batch gate — every micro-batch's documents are scored with

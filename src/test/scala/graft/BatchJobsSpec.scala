@@ -70,8 +70,8 @@ class BatchJobsSpec extends SparkSpec {
       .select("symbol", "bucket_start", "n").collect().map(_.toString).sorted.toSeq
     assert(got == want, "compaction changed the logical content")
     // the store keeps accepting streamed appends after the swap
-    Seq(("A", 1704069000L, 2L, 7L)).toDF("symbol", "bucket_start", "n", "batch_id")
-      .write.mode("append").partitionBy("symbol").parquet(dir)
+    graft.streaming.StreamPipeline.appendBuckets(Seq(("A", 1704069000L, 2L, 7L))
+      .toDF("symbol", "bucket_start", "n", "batch_id"), dir)
     assert(graft.streaming.StreamPipeline.readBuckets(spark, dir).count() == want.size + 1)
   }
 }

@@ -9,10 +9,12 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.batch.BatchJobs
 import graft.streaming.{Ingest, StreamPipeline}
 
-/** The two append-only stores that a rewrite also swaps: the tick
-  * bucket store (appended by StreamPipeline.run, swapped by
-  * BatchJobs.compactBuckets) and the PQ code index (appended by
-  * pqIndexMaintain, swapped by removeFromCodeIndex). A crash between a
+/** The append-only stores that a rewrite also swaps: the tick bucket
+  * store (appended by StreamPipeline.run, swapped by
+  * BatchJobs.compactBuckets), the PQ code index (appended by
+  * pqIndexMaintain, swapped by removeFromCodeIndex) and the MinHash
+  * band index (appended by BandIndex.append/writePrepped, swapped by
+  * BandIndex.compact/removeIds). A crash between a
   * swap's live→.old and tmp→live renames leaves no live directory. The
   * next append must heal first: appending into a fresh live directory
   * hides the history in `.old`, and the next swap deletes it as stale.
@@ -91,5 +93,44 @@ class HealBeforeAppendSpec extends SparkSpec {
     assert(erased == after.filterNot(_.getAs[Long]("id") == 7L),
       "erasure must heal, then remove exactly the erased id's codes")
     assert(!Files.exists(Paths.get(index + ".old")))
+  }
+
+  test("band index: appends and rewrites after a torn swap keep every earlier row") {
+    import graft.functions.{BandIndex, MicroDedup, TextAnalysis}
+    val dir = Files.createTempDirectory("graft_heal_band").toString
+    val index = s"$dir/index"
+    val toks = TextAnalysis.wordTokens(col("text"))
+    def docs(ids: Range) = ids.map(i => (i.toLong, (0 until 20).map(j => s"w${i}_$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    def tearBoth(): Unit = Seq("toks", "bands").foreach(t => tearSwap(s"$index/$t"))
+    def held() = Seq("toks", "bands").map(t => spark.read.parquet(s"$index/$t").collect().toSet)
+    BandIndex.build(docs(0 until 10), "doc_id", toks, index)
+    val held0 = held()
+
+    tearBoth() // as if compact crashed mid-swap on both tables
+    BandIndex.append(docs(10 until 15), "doc_id", toks, index)
+    val held1 = held()
+    held0.zip(held1).foreach { case (a, b) => assert(a.subsetOf(b), "the append must heal first") }
+
+    tearBoth()
+    val prepped = (15L until 17L).map { id =>
+      val t = (0L until 20L).map(_ + id * 100).toArray
+      MicroDedup.Survivor(id, t, MicroDedup.bandKeysOf(t, BandIndex.DefaultNumHashes, BandIndex.DefaultBands))
+    }.toArray
+    BandIndex.writePrepped(spark, prepped, index, "append")
+    val held2 = held()
+    held1.zip(held2).foreach { case (a, b) => assert(a.subsetOf(b), "the prepped append must heal first") }
+    assert(held2.head.size == held1.head.size + 2, "the prepped docs land")
+
+    tearBoth()
+    assert(BandIndex.exists(spark, index), "a torn swap reads as the index it was")
+    tearBoth()
+    BandIndex.compact(spark, index)
+    assert(held() == held2, "compaction must heal first and keep every row")
+    tearBoth()
+    BandIndex.removeIds(spark, index, Seq(3L))
+    assert(held() == held2.map(_.filterNot(_.getAs[Long]("id") == 3L)),
+      "erasure must heal first, then remove exactly the erased id's rows")
+    Seq("toks", "bands").foreach(t => assert(!Files.exists(Paths.get(s"$index/$t.old"))))
   }
 }

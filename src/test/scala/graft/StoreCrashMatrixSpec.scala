@@ -32,19 +32,23 @@ import graft.streaming.StreamPipeline
   *
   * Replaying batch 1 (the one foreachBatch replays) must leave every
   * store equal to the clean run, bitwise, with no `.old` left behind,
-  * and must count no late rows.
+  * and must count no late rows. An append-only store written ahead of
+  * the commits may hold the replayed batch twice (its reader drops the
+  * copy on batch_id), so it must equal the clean run as a set of rows.
   */
 class StoreCrashMatrixSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
   /** One maintainer: its swap-committed stores in commit order, its
-    * two input batches, its per-batch function over a store root, and
-    * any store it commits before the others by other means. */
+    * two input batches, its per-batch function over a store root, any
+    * store it commits before the others by other means, and any
+    * append-only store it appends to before them. */
   private case class Maintainer(name: String, stores: Seq[String],
                                 in: () => (DataFrame, DataFrame),
                                 run: (DataFrame, String, Long) => Unit,
-                                committedFirst: Seq[String] = Nil)
+                                committedFirst: Seq[String] = Nil,
+                                appendedFirst: Seq[String] = Nil)
 
   private sealed trait Crash
   private case object Staged extends Crash
@@ -99,14 +103,17 @@ class StoreCrashMatrixSpec extends SparkSpec {
       one("rfm", () => (ev0, ev1))(p.rfmBatch),
       one("sessions", events("user_id", "ts", "event_id") _)(p.sessionsBatch),
       one("cusum", () => (ev0, ev1))(p.cusumBatch),
-      two("lift", seq)(p.liftBatch))
+      two("lift", seq)(p.liftBatch),
+      Maintainer("panel", Seq("panel"),
+        events("event_id", "ts", "user_id", "event_type", "value", "props") _,
+        (b, r, id) => p.panelBatch(b, s"$r/ticks", s"$r/panel", id), appendedFirst = Seq("ticks")))
   }
 
   private def lateRows: Long = StreamPipeline.lateTransitionRows.get() +
     StreamPipeline.lateScd2Rows.get() + StreamPipeline.lateBotRows.get()
 
   /** A store's rows and schema, in a form that compares bitwise. */
-  private def snapshot(path: String): (String, Seq[String]) = {
+  private def snapshot(path: String, distinct: Boolean = false): (String, Seq[String]) = {
     def canon(v: Any): String = v match {
       case b: Array[Byte] => b.mkString("bytes(", ",", ")")
       case r: Row => r.toSeq.map(canon).mkString("(", ",", ")")
@@ -118,7 +125,8 @@ class StoreCrashMatrixSpec extends SparkSpec {
       case x => x.toString
     }
     val df = spark.read.parquet(path)
-    (df.schema.toDDL, df.collect().map(canon).toSeq.sorted)
+    val rows = df.collect().map(canon).toSeq.sorted
+    (df.schema.toDDL, if (distinct) rows.distinct else rows)
   }
 
   private def copy(from: String, to: String): Unit = FileUtils.copyDirectory(new File(from), new File(to))
@@ -127,7 +135,7 @@ class StoreCrashMatrixSpec extends SparkSpec {
   private def crashState(m: Maintainer, batch0: String, clean: String, k: Int, crash: Crash): String = {
     val root = Files.createTempDirectory(s"graft_crash_${m.name}").toString
     copy(batch0, root)
-    (m.committedFirst ++ m.stores.take(k)).foreach { s =>
+    (m.committedFirst ++ m.appendedFirst ++ m.stores.take(k)).foreach { s =>
       delete(s"$root/$s"); copy(s"$clean/$s", s"$root/$s")
     }
     val live = s"$root/${m.stores(k)}"
@@ -152,6 +160,7 @@ class StoreCrashMatrixSpec extends SparkSpec {
       m.run(b1, clean, 1L)
       val all = m.committedFirst ++ m.stores
       val want = all.map(s => s -> snapshot(s"$clean/$s")).toMap
+      val wantAppended = m.appendedFirst.map(s => s -> snapshot(s"$clean/$s", distinct = true)).toMap
       val cases = for (k <- m.stores.indices;
                        crash <- if (k == m.stores.size - 1) Seq(Staged, MidSwap, Swapped)
                                 else Seq(Staged, MidSwap)) yield (k, crash)
@@ -167,6 +176,10 @@ class StoreCrashMatrixSpec extends SparkSpec {
           all.foreach { s =>
             assert(snapshot(s"$root/$s") == want(s), s"$at: $s differs from the clean run")
             assert(!Files.exists(Paths.get(s"$root/$s.old")), s"$at: $s.old left behind")
+          }
+          m.appendedFirst.foreach { s =>
+            assert(snapshot(s"$root/$s", distinct = true) == wantAppended(s),
+              s"$at: $s differs from the clean run")
           }
         }
       }, 10.minutes)

@@ -455,8 +455,8 @@ class StreamingSpec extends SparkSpec {
       assert(buckets.count() == buckets.select("symbol", "bucket_start").distinct().count())
       assert(buckets.agg(sum($"n")).as[Long].head() == 10L)
       // simulate a replayed micro-batch: duplicate files with a higher batch_id
-      spark.read.parquet(dir).withColumn("batch_id", lit(99L))
-        .write.mode("append").partitionBy("symbol").parquet(dir)
+      StreamPipeline.appendBuckets(spark.read.parquet(dir).withColumn("batch_id", lit(99L)),
+        dir)
       val reread = StreamPipeline.readBuckets(spark, dir).filter($"symbol" === "A")
       assert(reread.agg(sum($"n")).as[Long].head() == 10L, "replay must not double-count")
     } finally q.stop()

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 import graft.batch.WarehouseLoader
+import graft.core.Tables
 import graft.sources.KafkaIO
 import graft.streaming.{Ingest, StreamPipeline, TickSource}
 
@@ -107,7 +108,7 @@ object Demo {
     val target0 = WarehouseLoader.readSnapshot(spark, snapPath, targetSchema)
     WarehouseLoader.writeSnapshot(spark,
       WarehouseLoader.load(target0, source, Seq("symbol", "window_start"), "__seq", loadTs), snapPath)
-    val snap1 = spark.read.parquet(snapPath)
+    val snap1 = Tables.parquet(spark, snapPath)
     val n1 = snap1.count()
     // re-apply the same load against the written snapshot: the MERGE
     // must be a no-op (idempotent under replay, like the reference's

@@ -203,8 +203,8 @@ object ScaleProbe {
     // 4-way join+agg: lineitem x orders with dims from sf0.1
     // (lazy: under SPARK_GRAFT_TABLES a skipped fact has no replica
     // file, and an eager read here would fail the whole probe run)
-    lazy val l = spark.read.parquet(s"$dst/lineitem.parquet")
-    lazy val o = spark.read.parquet(s"$dst/orders.parquet")
+    lazy val l = core.Tables.parquet(spark, s"$dst/lineitem.parquet")
+    lazy val o = core.Tables.parquet(spark, s"$dst/orders.parquet")
     lazy val cst = core.Tables.customer(spark, src)
     lazy val nat = core.Tables.nation(spark, src)
     time("q14_join_agg") {

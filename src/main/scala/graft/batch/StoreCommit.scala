@@ -3,6 +3,8 @@ package graft.batch
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Tables
+
 /** The commit protocol of every maintained store: the idempotent sink
   * that, with a replayable source and the checkpoint's offset log,
   * makes a foreachBatch maintainer exactly-once (the reference gets
@@ -86,13 +88,13 @@ object StoreCommit {
 
     /** The live store, if it exists yet. */
     def read(path: String): Option[DataFrame] =
-      if (exists(path)) Some(spark.read.parquet(path)) else None
+      if (exists(path)) Some(Tables.parquet(spark, path)) else None
 
     /** Write `merged` as the store's next layout into its staging dir. */
     def stage(path: String, merged: DataFrame): Unit = writeOne(merged, tmpOf(path))
 
     /** The staged layout, for a check that must pass before [[seal]]. */
-    def staged(path: String): DataFrame = spark.read.parquet(tmpOf(path))
+    def staged(path: String): DataFrame = Tables.parquet(spark, tmpOf(path))
 
     /** Mark the staged layout with this batch and swap it in. */
     def seal(path: String): Unit = {

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.core.Tables
 import graft.operators.MergeUpsert
 
 /** Manifest-based versioned table — the Delta/Iceberg commit protocol
@@ -208,7 +209,7 @@ object VersionedTable {
         case None => // pre-schema-header manifest: nothing to reconstruct from
           throw new java.io.IOException(s"version $v of $root is empty and carries no schema header")
       }
-    else spark.read.parquet(files: _*)
+    else Tables.parquet(spark, files: _*)
   }
 
   /** MERGE `source` into the table on `keys` (keep-source upsert,
@@ -307,7 +308,7 @@ object VersionedTable {
       return commit(spark, root, read(spark, root, Some(head)), overwrite = true,
         actionName = "delete")
     // one scan, pruned to the key columns: which files hold doomed rows?
-    val hit = spark.read.parquet(files: _*)
+    val hit = Tables.parquet(spark, files: _*)
       .select(input_file_name().as("__f") +: keys.map(col): _*)
       .join(broadcast(doomed), keys, "left_semi")
       .select(col("__f")).distinct().collect().map(_.getString(0)).toSet
@@ -317,8 +318,8 @@ object VersionedTable {
         hit.exists(h => new Path(h).toUri.getPath == new Path(f).toUri.getPath))
     if (touched.isEmpty) // nothing to rewrite: the version IS the old file set
       return commitManifestOnly(spark, root, files, "delete",
-        spark.read.parquet(files: _*).schema)
-    val survivors = spark.read.parquet(touched: _*).join(doomed, keys, "left_anti")
+        Tables.parquet(spark, files: _*).schema)
+    val survivors = Tables.parquet(spark, touched: _*).join(doomed, keys, "left_anti")
     commit(spark, root, survivors, overwrite = true, actionName = "delete",
       carryFiles = carried)
   }

@@ -3,6 +3,7 @@ package graft.batch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.operators.{Dedup, MergeUpsert}
 
 /** The warehouse-loader jobs (load_to_snowflake.py /
@@ -19,8 +20,9 @@ import graft.operators.{Dedup, MergeUpsert}
   * full-rescan mode is only for backfills.
   *
   * The target is a parquet snapshot directory; the merge rewrites it
-  * atomically via write-to-temp + swap. (With a Delta/Iceberg table
-  * the same call maps onto MERGE INTO; no warehouse here.)
+  * atomically via write-to-temp + swap ([[StoreCommit.replace]]).
+  * (With a Delta/Iceberg table the same call maps onto MERGE INTO; no
+  * warehouse here.)
   */
 object WarehouseLoader {
 
@@ -38,22 +40,21 @@ object WarehouseLoader {
     MergeUpsert.upsertStamped(target, deduped, keys, loadTs)
   }
 
-  /** Atomic snapshot swap: write to `<path>.tmp`, then swap into place
-    * via [[AtomicSwap]] (live path set aside before the new one lands,
-    * every rename checked). Readers see either the old or the new
-    * snapshot, never a partial write or a missing store. */
-  def writeSnapshot(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val tmp = path + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    AtomicSwap.swapInto(spark.sparkContext.hadoopConfiguration, tmp, path)
-  }
+  /** Atomic snapshot swap through [[StoreCommit.replace]]: heal a torn
+    * earlier swap, write the new snapshot to `<path>.tmp`, swap it in.
+    * Readers see either the old or the new snapshot, never a partial
+    * write or a missing store. */
+  def writeSnapshot(spark: SparkSession, df: DataFrame, path: String): Unit =
+    StoreCommit.replace(spark, path)(tmp => df.write.mode("overwrite").parquet(tmp))
 
   /** Read the current snapshot, or an empty frame with `schema` when
-    * the target does not exist yet (first run). */
+    * the target does not exist yet (first run). Heals first: a swap
+    * torn between live→.old and tmp→live otherwise reads as a first
+    * run, and the next `writeSnapshot` would keep that one load only. */
   def readSnapshot(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(path))) spark.read.parquet(path)
+    StoreCommit.heal(spark, path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Tables.parquet(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

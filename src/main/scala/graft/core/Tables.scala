@@ -1,6 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftSessionConf, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,6 +18,9 @@ import org.apache.spark.sql.types._
   * naive timestamps. (Spark 4 infers parquet `isAdjustedToUTC=false`
   * as TIMESTAMP_NTZ by default; under a UTC session the cast is
   * instant-preserving.)
+  *
+  * [[parquet]] is the program's one parquet reader: tables, maintained
+  * stores and serves all open through it.
   */
 object Tables {
   /** Columns stored as parquet TIMESTAMP(NANOS) (unsupported by Spark's
@@ -29,7 +39,7 @@ object Tables {
     // PushedFilter — with the cast Project in between, NO date filter
     // in the battery pushed down (PlanAuditSpec q111 caught it).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     val tsFixed = nanosCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       if (d.schema.fieldNames.contains(c) && d.schema(c).dataType == LongType)
         d.withColumn(c, expr(s"timestamp_micros($c DIV 1000)"))
@@ -41,6 +51,52 @@ object Tables {
         case _                => d
       }
     }
+  }
+
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job.
+    * Spark infers a parquet schema by running a job that reads the
+    * footer of one data file (`mergeSchemasInParallel`); this reads
+    * that footer on the driver instead and converts it with Spark's own
+    * `readSchemaFromFooter` + `ParquetToSparkSchemaConverter`, built
+    * from this session's conf, so the schema is the one inference
+    * gives (nanosAsLong, inferTimestampNTZ and the Spark schema stored
+    * in the footer included). The footer is that of the first data file
+    * found, taking `paths` in order and each directory in name order,
+    * skipping the names Spark's file index hides (`_`/`.` prefixes:
+    * `_SUCCESS`, `.crc` files, the `_graft_batch_<id>` commit marker)
+    * below each root. Partition columns are not in a footer: Spark
+    * still discovers and appends them (`bucket_day=` of the tick
+    * store), without a job. When no path holds a data file, the plain
+    * read raises Spark's own error (no such path, or unable to infer). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.iterator.flatMap { p =>
+      val path = new Path(p)
+      firstDataFile(path.getFileSystem(conf), path)
+    }.nextOption() match {
+      case Some(file) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+          new ParquetToSparkSchemaConverter(GraftSessionConf(spark)))
+        spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
+  /** Spark's `HadoopFSUtils.shouldFilterOutPathName` for data files. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  private def firstDataFile(fs: FileSystem, root: Path): Option[FileStatus] = {
+    def below(dir: Path): Iterator[FileStatus] =
+      fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName)).sortBy(_.getPath.getName)
+        .iterator.flatMap(s => if (s.isDirectory) below(s.getPath) else Iterator(s).filter(_.getLen > 0))
+    try {
+      val st = fs.getFileStatus(root)
+      if (st.isDirectory) below(root).nextOption() else Some(st)
+    } catch { case _: FileNotFoundException => None }
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "lineitem")

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Persisted, incrementally-maintained MinHash-LSH band index.
   *
   * [[NearDup.minHashProbePairs]] is the right *dataflow* for per-batch
@@ -143,9 +145,9 @@ object BandIndex {
       sv.bandKeys.zipWithIndex.map { case (k, b) => (b, k, sv.id, sv.toks.length) }
     }.toDF("band", "band_key", "probe_id", "sz_p")
     val probeToks = survivors.toSeq.map(s => (s.id, s.toks.toSeq)).toDF("probe_id", "toks_p")
-    val corpusBands = spark.read.parquet(bandsPath(path))
+    val corpusBands = Tables.parquet(spark, bandsPath(path))
       .select(col("band"), col("band_key"), col("id").as("corpus_id"), col("sz").as("sz_c"))
-    val corpusToks = spark.read.parquet(toksPath(path))
+    val corpusToks = Tables.parquet(spark, toksPath(path))
       .select(col("id").as("corpus_id"), col("toks").as("toks_c"))
     corpusBands
       .join(broadcast(probeBands), Seq("band", "band_key"))
@@ -166,7 +168,7 @@ object BandIndex {
   def compact(spark: SparkSession, path: String): Unit =
     for ((sub, key) <- Seq(toksPath(path) -> Seq("id"), bandsPath(path) -> Seq("id", "band")))
       graft.batch.StoreCommit.replace(spark, sub) { staging =>
-        spark.read.parquet(sub).dropDuplicates(key).write.mode("overwrite").parquet(staging)
+        Tables.parquet(spark, sub).dropDuplicates(key).write.mode("overwrite").parquet(staging)
       }
 
   /** GDPR-shaped delete: drop `ids` from both index tables (rewrite +
@@ -182,7 +184,7 @@ object BandIndex {
     val del = ids.select(col(ids.columns.head).cast("long").as("id"))
     for (sub <- Seq(toksPath(path), bandsPath(path)))
       graft.batch.StoreCommit.replace(spark, sub) { staging =>
-        val orig = spark.read.parquet(sub)
+        val orig = Tables.parquet(spark, sub)
         // the USING anti-join moves `id` first — re-select the original
         // column order so the rewritten table is byte-compatible with a
         // fresh build
@@ -210,7 +212,7 @@ object BandIndex {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probeBands = band(p, numHashes, bands)
       .select(col("band"), col("band_key"), col("id").as("probe_id"), col("sz").as("sz_p"))
-    val corpusBands = spark.read.parquet(bandsPath(path))
+    val corpusBands = Tables.parquet(spark, bandsPath(path))
       .select(col("band"), col("band_key"), col("id").as("corpus_id"), col("sz").as("sz_c"))
     // probe side broadcast: the corpus band scan joins map-side, and
     // the PPJoin size cut kills mismatched pairs before the distinct
@@ -219,7 +221,7 @@ object BandIndex {
       .filter(col("sz_p") >= col("sz_c") * threshold && col("sz_c") >= col("sz_p") * threshold)
       .select(col("probe_id"), col("corpus_id"))
       .distinct()
-    val corpusToks = spark.read.parquet(toksPath(path))
+    val corpusToks = Tables.parquet(spark, toksPath(path))
       .select(col("id").as("corpus_id"), col("toks").as("toks_c"))
     val out = candidates
       .join(p.select(col("id").as("probe_id"), col("toks").as("toks_p")), Seq("probe_id"))

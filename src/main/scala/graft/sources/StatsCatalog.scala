@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** File-level min/max statistics catalog — the Delta/Iceberg-style
   * data-skipping layer: keep one tiny stats row per data file and
   * intersect range predicates with the per-file [min, max] interval to
@@ -39,7 +41,7 @@ object StatsCatalog {
     val aggs = lit(1).as("_one") +: cols.flatMap { c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"), aggs.tail: _*)
   }
@@ -68,7 +70,7 @@ object StatsCatalog {
   def buildBloom(spark: SparkSession, path: String, column: String,
                  numHashes: Int = 3, bits: Long = 65536L): DataFrame = {
     import graft.functions.Sketches
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(input_file_name().as("file"),
         explode(array((0 until numHashes).map(j =>
           Sketches.slot(col(column), j, bits)): _*)).as("bit"))
@@ -96,9 +98,9 @@ object StatsCatalog {
     val keep = pruneFiles(stats, column, lo, hi)
     val pred = col(column) >= lit(lo) && col(column) <= lit(hi)
     if (keep.isEmpty) {
-      val schema = spark.read.parquet(path).schema
+      val schema = Tables.parquet(spark, path).schema
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else spark.read.parquet(keep: _*).filter(pred)
+    } else Tables.parquet(spark, keep: _*).filter(pred)
   }
 
   /** [[prunedRead]] with the MILLION-FILE regime gate (the
@@ -129,7 +131,7 @@ object StatsCatalog {
       .filter(col(s"max_$column") >= lit(lo) && col(s"min_$column") <= lit(hi))
       .count()
     if (nSurvivors <= collectGate) prunedRead(spark, path, stats, column, lo, hi)
-    else spark.read.parquet(path)
+    else Tables.parquet(spark, path)
       .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.batch.StoreCommit
+import graft.core.Tables
 
 /** The streaming windowed-metrics pipeline — the *legal* form of the
   * reference's core query.
@@ -286,7 +287,7 @@ object StreamPipeline {
     * reads too; BatchJobs.compactBuckets migrates it. */
   def readBuckets(spark: SparkSession, bucketPath: String): DataFrame =
     graft.operators.Dedup.keepFirst(
-      spark.read.parquet(bucketPath).drop(DayPartition),
+      Tables.parquet(spark, bucketPath).drop(DayPartition),
       Seq("symbol", "bucket_start"), Seq(col("batch_id")))
       .drop("batch_id")
 
@@ -356,7 +357,7 @@ object StreamPipeline {
       // re-admitting their near-dups. One-time cost, then O(batch).
       indexPath.foreach { ix =>
         if (corpusExists && !graft.functions.BandIndex.exists(spark, ix))
-          graft.functions.BandIndex.build(spark.read.parquet(corpusPath), "doc_id", toks, ix)
+          graft.functions.BandIndex.build(Tables.parquet(spark, corpusPath), "doc_id", toks, ix)
       }
       val indexed = indexPath.filter(ix => graft.functions.BandIndex.exists(spark, ix))
 
@@ -406,7 +407,7 @@ object StreamPipeline {
           case None if corpusExists =>
             val survivorIds = micro.survivors.map(_.id).toSeq.toDF("doc_id")
             val dups = graft.functions.NearDup.minHashProbePairs(
-              spark.read.parquet(corpusPath),
+              Tables.parquet(spark, corpusPath),
               batch.join(broadcast(survivorIds), Seq("doc_id"), "left_semi"),
               "doc_id", toks, threshold = threshold)
             val ids = dups.select(col("probe_id")).distinct()
@@ -451,7 +452,7 @@ object StreamPipeline {
             spark, ix, batchSurvivors, "doc_id", toks, threshold = threshold))
         case None if corpusExists =>
           Some(graft.functions.NearDup.minHashProbePairs(
-            spark.read.parquet(corpusPath), batchSurvivors, "doc_id", toks,
+            Tables.parquet(spark, corpusPath), batchSurvivors, "doc_id", toks,
             threshold = threshold))
         case None => None
       }
@@ -550,7 +551,7 @@ object StreamPipeline {
       // was in an earlier batch)
       val novel =
         if (storeExists)
-          blk.join(spark.read.parquet(storePath).select(col("fp")).distinct(),
+          blk.join(Tables.parquet(spark, storePath).select(col("fp")).distinct(),
             Seq("fp"), "left_anti")
         else blk
       val cleaned = bd.rebuild(batch, col("doc_id"), col("text"), bd.keptOffsets(novel))
@@ -636,7 +637,7 @@ object StreamPipeline {
     val days = stamped.select(col("day")).distinct()
       .collect().map(_.getDate(0)) // bounded: a micro-batch spans few days
     if (days.isEmpty) return
-    val affected = spark.read.parquet(tickStore)
+    val affected = Tables.parquet(spark, tickStore)
       .filter(col("day").isin(days.toIndexedSeq: _*)) // partition-pruned
       .dropDuplicates("event_id", "batch_id")
       .drop("day", "batch_id")
@@ -825,7 +826,7 @@ object StreamPipeline {
   /** The maintained Gram store as the flat buffer [[graft.functions
     * .PowerIteration.top]] consumes. */
   def readGram(spark: SparkSession, gramPath: String, dim: Int = 64): Array[Long] = {
-    val rows = spark.read.parquet(gramPath)
+    val rows = Tables.parquet(spark, gramPath)
       .collect().map(r => r.getAs[Int]("k") -> r.getAs[Long]("v")).toMap
     Array.tabulate(dim * dim + dim + 1)(k => rows.getOrElse(k, 0L))
   }
@@ -1038,8 +1039,8 @@ object StreamPipeline {
     * counts plus the carry's provisional open-session ENDs. */
   def attributionServe(spark: SparkSession, countsPath: String, carryPath: String): org.apache.spark.sql.DataFrame = {
     import graft.operators.Markov
-    val counts = spark.read.parquet(countsPath)
-    val open = spark.read.parquet(carryPath).filter(col("open_p") === 0L)
+    val counts = Tables.parquet(spark, countsPath)
+    val open = Tables.parquet(spark, carryPath).filter(col("open_p") === 0L)
       .groupBy(col("event_type").as("f"))
       .agg(count(lit(1)).as("n"))
       .select(col("f"), lit("NULL").as("t2"), col("n"))
@@ -1125,7 +1126,7 @@ object StreamPipeline {
   /** Serve q204's path mining from the maintained count table — the
     * SAME Paths.close the declared query calls. */
   def pathsServe(spark: SparkSession, countsPath: String): org.apache.spark.sql.DataFrame =
-    graft.operators.Paths.close(spark.read.parquet(countsPath))
+    graft.operators.Paths.close(Tables.parquet(spark, countsPath))
 
   /** STREAMING SCD TYPE-2 MAINTENANCE (leg 23): q220's dimension
     * build kept live — the change log becomes an as-of-joinable
@@ -1340,7 +1341,7 @@ object StreamPipeline {
     * psiFromGrid closing the declared query calls. */
   def psiServe(spark: SparkSession, gridPath: String): DataFrame =
     graft.queries.AuditQueries.psiFromGrid(
-      spark.read.parquet(gridPath).select(col("event_type"), col("day"),
+      Tables.parquet(spark, gridPath).select(col("event_type"), col("day"),
         col("band"), col("x")))
 
   /** Serve q264's Jensen-Shannon drift from the SAME maintained
@@ -1349,7 +1350,7 @@ object StreamPipeline {
     * AuditQueries.jsFromGrid the declared query calls. */
   def jsServe(spark: SparkSession, gridPath: String): DataFrame =
     graft.queries.AuditQueries.jsFromGrid(
-      spark.read.parquet(gridPath).select(col("event_type"), col("day"),
+      Tables.parquet(spark, gridPath).select(col("event_type"), col("day"),
         col("band"), col("x")))
 
   /** STREAMING HLL REGISTER MAINTENANCE (leg 25): q232's
@@ -1384,7 +1385,7 @@ object StreamPipeline {
     * the SAME hllEstimate closing the declared query calls. */
   def hllServe(spark: SparkSession, regPath: String): DataFrame =
     graft.queries.AuditQueries.hllEstimate(
-      spark.read.parquet(regPath).select(col("source"), col("bucket"), col("m")))
+      Tables.parquet(spark, regPath).select(col("source"), col("bucket"), col("m")))
       .select(col("source"), col("n_buckets_used"), col("hll_est_r2"))
 
   /** STREAMING MEDIAN/MAD MAINTENANCE (leg 26): q248's robust
@@ -1415,7 +1416,7 @@ object StreamPipeline {
     * madFromGrid closing the declared query calls. */
   def madServe(spark: SparkSession, gridPath: String): DataFrame =
     graft.queries.InsightQueries.madFromGrid(
-      spark.read.parquet(gridPath).select(col("event_type"), col("vc"), col("x")))
+      Tables.parquet(spark, gridPath).select(col("event_type"), col("vc"), col("x")))
 
   /** The q260 trimmed/winsorized means served from the SAME
     * madMaintain grid — one store, two serves: the (type, cent) count
@@ -1423,7 +1424,7 @@ object StreamPipeline {
     * robust-location readout costs no extra maintainer. */
   def trimmedServe(spark: SparkSession, gridPath: String): DataFrame =
     graft.queries.InsightQueries.trimmedFromGrid(
-      spark.read.parquet(gridPath).select(col("event_type"), col("vc"), col("x")))
+      Tables.parquet(spark, gridPath).select(col("event_type"), col("vc"), col("x")))
 
   /** STREAMING BASKET-RULES MAINTENANCE (leg 27): q246's market-
     * basket association rules kept live — the cross-sell readout a
@@ -1456,7 +1457,7 @@ object StreamPipeline {
     * rulesFromCells closing the declared query calls. */
   def basketServe(spark: SparkSession, cellsPath: String): DataFrame =
     graft.queries.InsightQueries.rulesFromCells(
-      spark.read.parquet(cellsPath).select(col("ka"), col("kb"), col("cnt")))
+      Tables.parquet(spark, cellsPath).select(col("ka"), col("kb"), col("cnt")))
 
   /** The q220 dimension served from the maintained stores: closed
     * intervals + each user's open interval (valid_to NULL,
@@ -1467,7 +1468,7 @@ object StreamPipeline {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     }
-    val open = spark.read.parquet(carryPath)
+    val open = Tables.parquet(spark, carryPath)
       .select(col("user_id"), col("version"), col("state"), col("valid_from"),
         lit(null).cast("timestamp").as("valid_to"), lit(true).as("is_current"))
     // the dim root is a set of per-batch `batch=<id>` partition dirs
@@ -1481,7 +1482,7 @@ object StreamPipeline {
     // exception from the actual parquet read propagates.
     val closedOpt =
       if (exists(dimPath) && dimHasDataFiles(spark, dimPath))
-        Some(spark.read.parquet(dimPath)
+        Some(Tables.parquet(spark, dimPath)
           .select(col("user_id"), col("version"), col("state"), col("valid_from"),
             col("valid_to"), lit(false).as("is_current")))
       else None
@@ -1629,7 +1630,7 @@ object StreamPipeline {
     * minute is greatest(closed-minute max, the open minute). */
   def botServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.operators.Bots.profile(
-      spark.read.parquet(storePath).select(col("user_id"), col("n_events"),
+      Tables.parquet(spark, storePath).select(col("user_id"), col("n_events"),
         col("n_sessions"), col("n_gaps"), col("sg"), col("sg2"),
         greatest(col("closed_max"), col("cur_epm")).as("epm_max")))
 
@@ -1637,13 +1638,13 @@ object StreamPipeline {
     * the SAME riskFromCloses closing the declared query calls. */
   def riskServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.riskFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q198's pairs-trading screen from the closes store —
     * the SAME pairsFromCloses closing the declared query calls. */
   def pairsServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.pairsFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q208's SMA-crossover backtest from the closes store — the
     * SAME crossoverFromCloses closing the declared query calls, so a
@@ -1651,17 +1652,17 @@ object StreamPipeline {
     * off the maintained day grid without a tick re-scan. */
   def crossoverServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.crossoverFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q203's EWMA forecast backtest from the closes store. */
   def ewmaServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.ewmaFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q210's Holt trend backtest from the closes store. */
   def holtServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.holtFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q221's VaR/CVaR order statistics from the closes store —
     * the SAME varCvarFromCloses closing the declared query calls, so
@@ -1669,32 +1670,32 @@ object StreamPipeline {
     * maintained day grid without a tick re-scan. */
   def varCvarServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.varCvarFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q222's Kalman one-step backtest from the closes store. */
   def kalmanServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.kalmanFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q223's cointegration screen from the closes store. */
   def cointServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.MarketQueries.cointFromCloses(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q233's Holt-Winters seasonal backtest from the closes
     * store — completes the forecast-ladder serves (EWMA, Holt, HW,
     * GARCH) on one maintained day grid. */
   def hwServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.AuditQueries.holtWinters(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   /** Serve q236's GARCH volatility backtest from the closes store. */
   def garchServe(spark: SparkSession, storePath: String): org.apache.spark.sql.DataFrame =
     graft.queries.AuditQueries.garchBacktest(
-      graft.operators.DailyCloses.closes(spark.read.parquet(storePath)))
+      graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath)))
 
   private def closesOf(spark: SparkSession, storePath: String) =
-    graft.operators.DailyCloses.closes(spark.read.parquet(storePath))
+    graft.operators.DailyCloses.closes(Tables.parquet(spark, storePath))
 
   /** Serve q257's Jarque-Bera normality decisions from the closes
     * store — returns re-derive through the SAME returnsFromCloses
@@ -1771,7 +1772,7 @@ object StreamPipeline {
     * so serve ≡ batch q200 is structural. Volume-independent: the
     * store is ≤ |types|² rows at any feed size. */
   def pagerankServe(spark: SparkSession, countsPath: String): org.apache.spark.sql.DataFrame = {
-    val cnt = spark.read.parquet(countsPath).collect()
+    val cnt = Tables.parquet(spark, countsPath).collect()
       .map(r => (r.getAs[String]("from_type"), r.getAs[String]("to_type")) ->
         r.getAs[Long]("n_trans")).toMap
     graft.queries.BehaviorQueries.pagerankFromCounts(spark, cnt)
@@ -1856,7 +1857,7 @@ object StreamPipeline {
     * the SAME cusumFromDaily closing the declared query calls. */
   def cusumServe(spark: SparkSession, countsPath: String): DataFrame =
     graft.queries.BehaviorQueries.cusumFromDaily(
-      spark.read.parquet(countsPath).select(col("event_type"), col("day"), col("x")))
+      Tables.parquet(spark, countsPath).select(col("event_type"), col("day"), col("x")))
 
   /** STREAMING SESSION-LIFT MAINTENANCE: q190's association table
     * kept live. A session's support/lift contribution depends only on
@@ -1891,9 +1892,9 @@ object StreamPipeline {
   /** The q190 result served from the maintained stores. */
   def liftServe(spark: SparkSession, countsPath: String, carryPath: String): DataFrame = {
     import graft.operators.SessionLift
-    val closed = spark.read.parquet(countsPath)
+    val closed = Tables.parquet(spark, countsPath)
     val open = SessionLift.contributions(
-      spark.read.parquet(carryPath).select(col("open_types").as("types")))
+      Tables.parquet(spark, carryPath).select(col("open_types").as("types")))
     SessionLift.lift(closed.unionByName(open)
       .groupBy(col("kind"), col("k1"), col("k2")).agg(sum(col("n")).cast("long").as("n")))
   }
@@ -1951,7 +1952,7 @@ object StreamPipeline {
     * micro-batches drop by keeping the min batch_id per (id, m). */
   def readCodeIndex(spark: SparkSession, indexPath: String): DataFrame =
     graft.operators.Dedup.keepFirst(
-      spark.read.parquet(indexPath), Seq("id", "m"), Seq(col("batch_id")))
+      Tables.parquet(spark, indexPath), Seq("id", "m"), Seq(col("batch_id")))
       .drop("batch_id")
 
   /** GDPR erasure from the streamed code index: rewrite the parquet
@@ -1964,7 +1965,7 @@ object StreamPipeline {
   def removeFromCodeIndex(spark: SparkSession, indexPath: String, ids: DataFrame): Unit = {
     val del = ids.select(col(ids.columns.head).cast("long").as("id"))
     StoreCommit.replace(spark, indexPath) { staging =>
-      val orig = spark.read.parquet(indexPath)
+      val orig = Tables.parquet(spark, indexPath)
       orig.join(del, Seq("id"), "left_anti")
         .select(orig.columns.map(col).toSeq: _*)
         .write.mode("overwrite").parquet(staging)

@@ -18,6 +18,8 @@ import graft.streaming.{Ingest, StreamPipeline}
   * swap's live→.old and tmp→live renames leaves no live directory. The
   * next append must heal first: appending into a fresh live directory
   * hides the history in `.old`, and the next swap deletes it as stale.
+  * The warehouse snapshot has the same hazard on its read-merge-write
+  * cycle: a torn `writeSnapshot` swap must not read as a first run.
   */
 class HealBeforeAppendSpec extends SparkSpec {
   import spark.implicits._
@@ -132,5 +134,31 @@ class HealBeforeAppendSpec extends SparkSpec {
     assert(held() == held2.map(_.filterNot(_.getAs[Long]("id") == 3L)),
       "erasure must heal first, then remove exactly the erased id's rows")
     Seq("toks", "bands").foreach(t => assert(!Files.exists(Paths.get(s"$index/$t.old"))))
+  }
+
+  test("warehouse snapshot: a load after a torn writeSnapshot swap keeps every earlier row") {
+    import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
+    import graft.batch.WarehouseLoader
+    val snap = s"${Files.createTempDirectory("graft_heal_snapshot")}/snapshot"
+    val keys = Seq("symbol", "window_start")
+    def source(rows: (String, Long, Double)*) = rows.toDF("symbol", "window_start", "close")
+      .withColumn("__seq", lit(1L))
+    val schema = StructType(source().drop("__seq").schema.fields :+
+      StructField("last_updated", TimestampType))
+    def loadInto(at: Long, rows: (String, Long, Double)*): Unit =
+      WarehouseLoader.writeSnapshot(spark, WarehouseLoader.load(
+        WarehouseLoader.readSnapshot(spark, snap, schema), source(rows: _*), keys, "__seq",
+        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(at))), snap)
+    loadInto(1704067200L, ("A", 0L, 1.0), ("B", 0L, 2.0))
+    loadInto(1704153600L, ("A", 300L, 1.5))
+    val before = spark.read.parquet(snap).collect().toSet
+    assert(before.size == 3)
+
+    tearSwap(snap) // as if the last writeSnapshot crashed mid-swap
+    loadInto(1704240000L, ("C", 0L, 3.0))
+    val after = spark.read.parquet(snap).collect().toSet
+    assert(before.subsetOf(after), s"the load must heal first: lost ${before -- after}")
+    assert(after.size == before.size + 1, "the new load lands")
+    assert(!Files.exists(Paths.get(snap + ".old")))
   }
 }

@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Full materialization without sink cost: the noop format consumes
@@ -49,7 +50,7 @@ object Bench {
     val results = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      try { run(fn(spark, sfDir)) } catch { case _: Throwable => }
+      try { run(fn(spark, sfDir)) } catch { case NonFatal(_) => }
       // Two measured runs, report the MIN: a single measured run is
       // exposed to transient machine noise (a concurrent oracle
       // process, a GC pause landing mid-query) — the round-5 driver
@@ -70,7 +71,7 @@ object Bench {
       while (ok && (rep < 2 || (rep < 3 && dt > 1.5))) {
         val t0 = System.nanoTime()
         ok = try { run(fn(spark, sfDir)); true } catch {
-          case t: Throwable => System.err.println(s"[bench] $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}"); false
+          case NonFatal(t) => System.err.println(s"[bench] $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}"); false
         }
         if (ok) dt = math.min(dt, (System.nanoTime() - t0) / 1e9)
         rep += 1

@@ -3,45 +3,50 @@ package graft.batch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Ohlcv}
+import graft.operators.Ohlcv
 
 /** The reference's batch pipeline (spark_batch_processor.py:42-153) as
-  * pure DataFrame transforms: dedup -> daily OHLCV rollup ->
-  * daily_change -> the declared 8-column projection, plus the
-  * partitioned writers (S9).
+  * pure DataFrame transforms: dedup + daily OHLCV rollup (one
+  * aggregate) -> daily_change -> the declared 8-column projection,
+  * plus the partitioned writers (S9).
   */
 object BatchJobs {
 
   /** Daily metrics with the reference's declared output schema
-    * (load_to_snowflake.py:72-85). Deterministic open/close via the
-    * `order` columns (the reference's unordered first/last is
-    * nondeterministic — SURVEY.md §2 A5); the input is deduped on
-    * (symbol, date) first, exactly as spark_batch_processor.py:83. */
+    * (load_to_snowflake.py:72-85). The reference dedups the day's bars
+    * on (symbol, date) and then rolls them up
+    * (spark_batch_processor.py:83-101); after the dedup every group is
+    * one row, so the rollup's first/max/min/sum/last are identities on
+    * that row. Both steps are therefore one aggregate: per (symbol,
+    * date), `min_by` the whole bar under the `order` key — the row a
+    * keep-first dedup keeps (the reference's unordered keep is
+    * nondeterministic — SURVEY.md §2 A5) — and project it. One
+    * exchange, no window sort, no self-join.
+    *
+    * The same rows and schema as keep-first + rollup + join:
+    *  - the struct key compares field by field, ascending with nulls
+    *    first, as the ascending `row_number` does ([[Ohlcv.orderKey]],
+    *    which also rejects a descending order column);
+    *  - rows with a null `symbol` or `date` are dropped, as the inner
+    *    USING join on the keys dropped them;
+    *  - `daily_volume` takes the type `sum(volume)` resolves to (int
+    *    gives bigint, decimal widens), read from the analyzed schema,
+    *    which runs no job. */
   def dailyMetrics(bars: DataFrame, order: Seq[Column]): DataFrame = {
-    val deduped = Dedup.keepFirst(bars, Seq("symbol", "date"), order)
-    Ohlcv.rollup(
-      deduped,
-      keys = Seq(col("symbol"), col("date")),
-      keyNames = Seq("symbol", "date"),
-      valueCol = col("close"),
-      order = order,
-      volCol = Some(col("volume"))
-    ).join(
-      // open/high/low come from their own source columns per the
-      // reference (first(open), max(high), min(low)), not from close
-      deduped.groupBy(col("symbol"), col("date")).agg(
-        first(col("open")).as("daily_open"),
-        max(col("high")).as("daily_high"),
-        min(col("low")).as("daily_low")
-      ),
-      Seq("symbol", "date")
-    ).select(
-      col("symbol"), col("date"),
-      col("daily_open"), col("daily_high"), col("daily_low"),
-      col("volume").as("daily_volume"),
-      col("close").as("daily_close"),
-      Ohlcv.dailyChange(col("daily_open"), col("close")).as("daily_change")
-    )
+    val volumeType = bars.select(sum(col("volume"))).schema.head.dataType
+    bars
+      .filter(col("symbol").isNotNull && col("date").isNotNull)
+      .groupBy(col("symbol"), col("date"))
+      .agg(min_by(struct(col("open"), col("high"), col("low"), col("close"), col("volume")),
+        Ohlcv.orderKey(order)).as("bar"))
+      .select(
+        col("symbol"), col("date"),
+        col("bar.open").as("daily_open"), col("bar.high").as("daily_high"),
+        col("bar.low").as("daily_low"),
+        col("bar.volume").cast(volumeType).as("daily_volume"),
+        col("bar.close").as("daily_close"),
+        Ohlcv.dailyChange(col("bar.open"), col("bar.close")).as("daily_change")
+      )
   }
 
   /** S9: overwrite CSV partitioned by symbol under a date=... path. */

@@ -61,6 +61,19 @@ object DailyCloses {
         col("last.ts").as("ts"), col("last.event_id").as("event_id"),
         col("last.close_lv").as("close_lv"))
 
+  /** Fold raw ticks into a state frame: `merge(store, ticks in state
+    * shape)`. Each tick is projected to the row `state` would emit if
+    * it won its (event_type, day) — `value > 0`, `day = to_date(ts)`,
+    * `close_lv = qlog2(value)` — so the fold is ONE `max_by` aggregate
+    * over store ∪ ticks: one exchange, where `merge(store,
+    * state(ticks))` pays two. Equal to `state(a ∪ b)` for `store =
+    * state(a)` by associativity; a redelivered tick ties with itself. */
+  def fold(store: DataFrame, events: DataFrame): DataFrame =
+    merge(store, events
+      .filter(col("value") > 0)
+      .select(col("event_type"), to_date(col("ts")).as("day"), col("ts"), col("event_id"),
+        qlog2(col("value")).as("close_lv")))
+
   /** The (event_type, day, close_lv) day grid a consumer wants. */
   def closes(state: DataFrame): DataFrame =
     state.select(col("event_type"), col("day"), col("close_lv"))

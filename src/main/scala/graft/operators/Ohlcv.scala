@@ -36,22 +36,13 @@ object Ohlcv {
       order: Seq[Column],
       volCol: Option[Column] = None
   ): DataFrame = {
-    // min_by/max_by consume the order columns as a STRUCT ordering
-    // key, which is ascending by construction — a SortOrder input like
-    // col("ts").desc (legal in the old row_number formulation) would
-    // silently invert open/close, so reject it loudly.
-    order.foreach { c =>
-      require(!org.apache.spark.sql.GraftColumnShim.expression(c)
-          .isInstanceOf[org.apache.spark.sql.catalyst.expressions.SortOrder],
-        s"Ohlcv.rollup order columns must be plain ascending columns, got sort expression: $c")
-    }
     // open/close = value at the min/max of the (ascending) order key —
     // min_by/max_by carry the argmin/argmax through the SAME hash
     // aggregate as high/low/volume: one shuffle, NO window sort. The
     // previous formulation paid two full per-key sorts (asc + desc
     // row_number) before the groupBy; at 100 TB those sorts dominate.
+    val ordKey = orderKey(order)
     val keyed = df.withColumns(keyNames.zip(keys).toMap)
-    val ordKey = struct(order: _*)
     val aggs = Seq(
       min_by(valueCol, ordKey).as("open"),
       max(valueCol).as("high"),
@@ -59,6 +50,19 @@ object Ohlcv {
       max_by(valueCol, ordKey).as("close")
     ) ++ volCol.map(v => sum(v).as("volume")).toSeq :+ count(lit(1)).as("n")
     keyed.groupBy(keyNames.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The STRUCT ordering key that min_by/max_by consume for `order`.
+    * A struct compares field by field, each ascending with nulls first
+    * — the order an ascending `row_number` window sorts by. It cannot
+    * express a SortOrder like col("ts").desc (legal in a window), which
+    * would silently swap first and last, so reject one loudly. */
+  private[graft] def orderKey(order: Seq[Column]): Column = {
+    order.foreach { c =>
+      require(!org.apache.spark.sql.GraftColumnShim.isSortOrder(c),
+        s"Ohlcv order columns must be plain ascending columns, got sort expression: $c")
+    }
+    struct(order: _*)
   }
 
   /** Strict-parity mode: the reference's unordered-window

@@ -1061,7 +1061,11 @@ object StreamPipeline {
     * Sharpe/Sortino/Calmar via MarketQueries.riskFromCloses,
     * [[pairsServe]] = q198's pairs screen via pairsFromCloses — the
     * live risk panel and stat-arb monitor, each a ≤ |instruments|·
-    * |days| computation at any feed volume. Idempotence/crash
+    * |days| computation at any feed volume. A micro-batch folds its
+    * ticks into the store as ONE `max_by` aggregate over store ∪ ticks
+    * ([[graft.operators.DailyCloses.fold]]: one exchange, not a
+    * per-batch aggregate and then a merge); the first batch, with no
+    * store yet, writes `DailyCloses.state(batch)`. Idempotence/crash
     * safety: [[graft.batch.StoreCommit]]. */
   def closesMaintain(ticksStream: DataFrame, storePath: String, checkpoint: String,
                      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
@@ -1072,8 +1076,7 @@ object StreamPipeline {
     if (batch.isEmpty) return
     StoreCommit.fold(batch.sparkSession, storePath, batchId) { store =>
       import graft.operators.DailyCloses
-      val bState = DailyCloses.state(batch)
-      store.fold(bState)(DailyCloses.merge(_, bState))
+      store.fold(DailyCloses.state(batch))(DailyCloses.fold(_, batch))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Full materialization without sink cost: the noop format consumes
     * every row/column of the result, so Catalyst cannot prune the
@@ -11,17 +11,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = core.GraftSession.envCores(32)
+    val spark = core.GraftSession("bench", cores)
     // Each query runs twice and the SECOND time is reported: the first
     // run absorbs JIT/codegen-compile/parquet-footer first-touch, which
     // otherwise lands on whichever queries happen to iterate first
@@ -39,13 +30,8 @@ object Bench {
     // printed now (for quiet-run logs) AND re-printed compactly at
     // the end, inside the driver's ~2k archived tail, next to the
     // post-battery reading
-    // toIntOption: SPARK_GRAFT_CPUS may be non-numeric ("*" for
-    // local[*]) — the canary thread count falls back to the real
-    // core count rather than crashing the bench at startup.
-    val nThreads = cpus.toIntOption
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val (preNs, preRatio) = HostCanary.measure(nThreads)
-    println(f"""BENCH_HOST_PRE {"ns_per_op":$preNs%.3f,"allcore_ratio":$preRatio%.2f,"threads":$nThreads}""")
+    val (preNs, preRatio) = HostCanary.measure(cores)
+    println(f"""BENCH_HOST_PRE {"ns_per_op":$preNs%.3f,"allcore_ratio":$preRatio%.2f,"threads":$cores}""")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val results = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -188,8 +174,8 @@ object Bench {
     }.sum
     // post-battery calibration + the combined canary line directly
     // before the final totals line so both sit in the archived tail
-    val (postNs, postRatio) = HostCanary.measure(nThreads)
-    println(f"""BENCH_HOST {"pre_ns_per_op":$preNs%.3f,"pre_allcore_ratio":$preRatio%.2f,"post_ns_per_op":$postNs%.3f,"post_allcore_ratio":$postRatio%.2f,"threads":$nThreads}""")
+    val (postNs, postRatio) = HostCanary.measure(cores)
+    println(f"""BENCH_HOST {"pre_ns_per_op":$preNs%.3f,"pre_allcore_ratio":$preRatio%.2f,"post_ns_per_op":$postNs%.3f,"post_allcore_ratio":$postRatio%.2f,"threads":$cores}""")
     // Canary-normalized subset (round-14 Next #5): the cross-round
     // subset-41 trend spans hosts reading 0.6–2.2 ns/op on the same
     // canary chain, so the raw seconds conflate plan changes with

@@ -26,19 +26,17 @@ object Tables {
   /** Columns stored as parquet TIMESTAMP(NANOS) (unsupported by Spark's
     * vectorized reader): read as long ns-since-epoch and truncated to
     * microseconds with integral division (a double division would lose
-    * precision above 2^53 ns). The DuckDB oracle applies the matching
+    * precision above 2^53 ns). Needs `nanosAsLong`, which
+    * [[GraftSession]] sets. The DuckDB oracle applies the matching
     * `::TIMESTAMP` (ns->us truncation) cast. */
   private val nanosCols: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
 
+  /** Opens one testdata table. Sets nothing on `spark`: under
+    * [[GraftSession]]'s parquet confs a naive timestamp already reads
+    * as TimestampType and a NANOS column as long; on any other session
+    * the NTZ cast below still gives the same values, and a NANOS column
+    * raises Spark's own error. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Read isAdjustedToUTC=false parquet timestamps as TimestampType
-    // DIRECTLY instead of TIMESTAMP_NTZ + cast: under the UTC session
-    // the values are identical, but the cast-free schema lets every
-    // shipdate/orderdate range predicate reach the parquet scan as a
-    // PushedFilter — with the cast Project in between, NO date filter
-    // in the battery pushed down (PlanAuditSpec q111 caught it).
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val df = parquet(spark, s"$dir/$name.parquet")
     val tsFixed = nanosCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       if (d.schema.fieldNames.contains(c) && d.schema(c).dataType == LongType)

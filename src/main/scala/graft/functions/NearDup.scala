@@ -165,7 +165,9 @@ object NearDup {
     * regimes: it recalls j≈0.86 pairs (2 random edits on random
     * 80-char text — the spec's planted worst case) at 99.97% per
     * pair, reproduces the brute-force pairs EXACTLY on both test
-    * corpora (graft.tools.FuzzyLshCheck, 0 missing / 0 spurious),
+    * corpora (0 missing / 0 spurious at sf0.01 and sf0.1, measured
+    * 2026-08; q59's strict brute-force oracle row re-checks it at
+    * sf0.01 on every Verify run, EditDistanceSpec the planted recall),
     * and generates ~5× fewer false candidates than the shallower
     * 16×4 banding on skew-gram text. Deeper rows-per-band (e.g.
     * 64/8) halve the candidates again but start missing the

@@ -472,12 +472,13 @@ object AnalyticsQueries {
   // char-3-gram MinHash candidates + banded-DP verify, identical
   // prefixes canonicalized to one node. At this geometry the output
   // EXACTLY equals the unblocked brute-force pairs on the test
-  // corpora (graft.tools.FuzzyLshCheck: 0 missing / 0 spurious at
-  // sf0.01 AND sf0.1), so the query carries a strict brute-force
-  // equality oracle that knows nothing about LSH — same argument as
-  // q22. Compare q56: the (lang, length-bucket) blocked form trades
-  // away cross-block pairs; this one only prunes on the sound
-  // |len diff| bound.
+  // corpora (measured 2026-08: 0 missing / 0 spurious at sf0.01 AND
+  // sf0.1; the strict oracle row re-checks sf0.01 on every Verify
+  // run, EditDistanceSpec the planted recall), so the query carries
+  // a strict brute-force equality oracle that knows nothing about
+  // LSH — same argument as q22. Compare q56: the (lang,
+  // length-bucket) blocked form trades away cross-block pairs; this
+  // one only prunes on the sound |len diff| bound.
   private def q59(s: SparkSession, dir: String): DataFrame =
     graft.functions.NearDup.editDistancePairsLsh(
       Tables.documents(s, dir),

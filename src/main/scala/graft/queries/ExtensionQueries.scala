@@ -36,10 +36,11 @@ object ExtensionQueries {
   // bands the deterministic detection probability at j>=0.8 is high
   // enough that the LSH output EQUALS the exact all-pairs result on
   // BOTH test corpora including sf0.1's ~3M boundary-heavy pairs
-  // (verified by graft.tools.LshRecallCheck: 0 missing / 0 spurious;
-  // the previous 96/24 missed 2 of 2,968,398 at sf0.1), so the query
-  // carries a strict DuckDB equality oracle computed by brute force —
-  // the oracle knows nothing about MinHash.
+  // (measured 2026-08: 0 missing / 0 spurious; the previous 96/24
+  // missed 2 of 2,968,398 at sf0.1; the strict oracle row re-checks
+  // sf0.01 on every Verify run, MinHashSpec the planted recall), so
+  // the query carries a strict DuckDB equality oracle computed by
+  // brute force — the oracle knows nothing about MinHash.
   private def q22(s: SparkSession, dir: String): DataFrame =
     NearDup.minHashPairs(docs(s, dir), "doc_id", TextAnalysis.wordTokens(col("text")),
       numHashes = 128, bands = 32, threshold = 0.8)

@@ -155,7 +155,7 @@ object GovernQueries {
     * evaluation — release is CALLER-OWNED. CacheManager dedupes
     * identical plans (re-persisting the same vocabulary is a no-op,
     * not a second copy), and every harness that runs these queries
-    * (Bench, Verify, VerifyMany, ScaleProbe) clears the cache after
+    * (Bench, Verify, ScaleProbe) clears the cache after
     * each query's action completes. */
   private[graft] def phraseVocab(docs: DataFrame): DataFrame =
     docs

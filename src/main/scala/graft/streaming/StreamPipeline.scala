@@ -386,24 +386,17 @@ object StreamPipeline {
         .select(col("doc_id"), col("toks"),
           f.array((0 until 32).map(b =>
             f.xxhash64(f.slice(col("__sig"), b * 4 + 1, 4))): _*).as("bands"))
-      def dbg[A](label: String)(x: => A): A =
-        if (sys.env.contains("SPARK_GRAFT_DEDUP_DEBUG")) {
-          val t0 = System.nanoTime()
-          val r = x
-          println(f"[dedup-dbg] $label%-22s ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
-          r
-        } else x
-      val collected = dbg("prep+collect")(prepped.limit(microGate + 1).collect())
+      val collected = prepped.limit(microGate + 1).collect()
       if (collected.length <= microGate) {
         import spark.implicits._
         val docs = collected.map(r =>
           (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray))
-        val micro = dbg("MicroDedup.run")(graft.functions.MicroDedup.run(
-          docs, threshold = threshold, maxBucketSize = 4096))
+        val micro = graft.functions.MicroDedup.run(
+          docs, threshold = threshold, maxBucketSize = 4096)
         val dupIds: Set[Long] = indexed match {
           case Some(ix) =>
-            dbg("probeDupIds")(graft.functions.BandIndex.probeDupIdsPrepped(
-              spark, ix, micro.survivors, threshold = threshold).toSet)
+            graft.functions.BandIndex.probeDupIdsPrepped(
+              spark, ix, micro.survivors, threshold = threshold).toSet
           case None if corpusExists =>
             val survivorIds = micro.survivors.map(_.id).toSeq.toDF("doc_id")
             val dups = graft.functions.NearDup.minHashProbePairs(
@@ -434,10 +427,8 @@ object StreamPipeline {
             graft.functions.BandIndex.writePrepped(spark, novelSurvivors, ix, mode)
           }
         }
-        dbg("writes (corpus||index)") {
-          Await.result(wCorpus, scala.concurrent.duration.Duration.Inf)
-          Await.result(wIndex, scala.concurrent.duration.Duration.Inf)
-        }
+        Await.result(wCorpus, scala.concurrent.duration.Duration.Inf)
+        Await.result(wIndex, scala.concurrent.duration.Duration.Inf)
       } else {
       // ---- distributed fallback: batch-internal collapse via LSH
       // set pairs + connected components, min doc_id per group

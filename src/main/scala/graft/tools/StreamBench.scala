@@ -60,7 +60,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "100000").toInt
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "20").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.core.GraftSession.envCores(32)
     val spark = graft.core.GraftSession("streambench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
+import org.slf4j.LoggerFactory
 
 /** The program's one session factory: tests, perfbench and every main
   * (`Bench`, `Verify`, `Demo`, `ScaleProbe`, `StreamBench`) build
@@ -17,6 +19,13 @@ import org.apache.spark.sql.SparkSession
   * The two parquet confs are builder configs, so they land in the
   * `SparkConf` and every `spark.newSession()` inherits them; reading a
   * table ([[Tables]]) sets nothing on the session.
+  *
+  * So are `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl`: every `file:` path,
+  * through the FileSystem and the FileContext API, goes through
+  * [[LocalFs]], which creates and renames without forking `chmod` or
+  * `readlink`. The session logs one WARN if `file:` still resolves to
+  * a FileSystem cached in the JVM before it was built.
   */
 object GraftSession {
   /** Round-16 optimization (guide §6 input split size): the split
@@ -58,8 +67,11 @@ object GraftSession {
       // PushedFilter — with the cast Project in between, NO date filter
       // in the battery pushed down (PlanAuditSpec q111 caught it).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(LocalFs.sparkConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalFs.staleCacheWarning(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration))
+      .foreach(LoggerFactory.getLogger(getClass).warn(_))
     spark
   }
 }
